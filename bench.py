@@ -177,17 +177,6 @@ def _load_baseline() -> dict[str, float]:
                 d = json.load(fh)
             # the driver wraps our JSON line under "parsed"
             best = (d.get("parsed") or d).get("queries", {}) or {}
-            if not best and d.get("tail"):
-                # r5's JSON line outgrew the driver's tail buffer
-                # (parsed=null); scrape per-query seconds from the
-                # truncated tail instead. Scrape only the region before
-                # "vs_prev_round" (after it the same names map to
-                # ratios, not seconds).
-                frag = d["tail"].split('"vs_prev_round"')[0]
-                for m in re.finditer(r'"(\w+)":\s*([0-9.]+)', frag):
-                    name, val = m.group(1), float(m.group(2))
-                    if name in BENCH_QUERIES and name not in best:
-                        best[name] = val
         except Exception:
             best = {}
     return best

@@ -23,15 +23,14 @@ from session conf / environment:
   uses the context's if already set, else
   ``spark.featurebase.checkpoint.dir`` / ``FB_CHECKPOINT_DIR``. The
   100 TB posture for long jobs on preemptible machines.
-- ``disk`` — ``persist(StorageLevel.DISK_ONLY)``: blocks on executor
-  disks but LINEAGE KEPT, so a lost executor recomputes the frame
-  instead of failing the query; no distributed filesystem needed. The
-  middle posture (recompute-on-loss instead of resume-from-storage).
 
-All three run the identical algebra — consumers see the same rows.
-``pipeline.graph.connected_components`` keeps its own richer
-per-round ``checkpoint_dir`` cadence; this helper covers the
-single-shot producer/consumer sites.
+Both run the identical algebra — consumers see the same rows — and
+both CUT lineage: the materialized frame is an ExistingRDD scan that no
+other query's plan can match, so the CacheManager never substitutes it
+into another key's plan (a ``persist`` keeps the plan registered and
+does exactly that). Every lineage cut in the package goes through this
+helper, the connected-components loop's per-round labels included, so
+the mode is the one durability setting for all of them.
 """
 
 from __future__ import annotations
@@ -42,7 +41,7 @@ from pyspark.sql import DataFrame
 
 MODE_CONF = "spark.featurebase.materialize.mode"
 DIR_CONF = "spark.featurebase.checkpoint.dir"
-_VALID = ("local", "reliable", "disk")
+_VALID = ("local", "reliable")
 
 
 def _mode(spark) -> str:
@@ -77,11 +76,4 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
                 )
             sc.setCheckpointDir(d)
         return df.checkpoint(eager=eager)
-    if mode == "disk":
-        from pyspark import StorageLevel
-
-        out = df.persist(StorageLevel.DISK_ONLY)
-        if eager:
-            out.count()
-        return out
     return df.localCheckpoint(eager=eager)

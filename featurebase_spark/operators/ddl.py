@@ -16,6 +16,7 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, Row as SparkRow, SparkSession, functions as F
 
+from featurebase_spark.materialize import materialize
 from featurebase_spark.schema import TableDef
 
 
@@ -445,9 +446,7 @@ class Catalog:
                 "already exists"
             )
         df = self.spark.table(self._view(table))
-        postings = build_trigram_postings(df, "_id", field).localCheckpoint(
-            eager=False
-        )
+        postings = materialize(build_trigram_postings(df, "_id", field))
         self._text_indexes.setdefault(table, {})[field] = postings
 
     def like_search(
@@ -475,9 +474,7 @@ class Catalog:
             )
         df = self.spark.table(self._view(table))
         if reg[field] is None:  # stale: a write touched the column
-            reg[field] = build_trigram_postings(
-                df, "_id", field
-            ).localCheckpoint(eager=False)
+            reg[field] = materialize(build_trigram_postings(df, "_id", field))
         return like_contains(
             df, "_id", field, literal, postings=reg[field],
             broadcast=broadcast,
@@ -599,7 +596,7 @@ class Catalog:
     @staticmethod
     def _pin_field(cat, f: str, kind: str, small_hint: bool = False) -> None:
         """Materialize a field's fragment frame EAGERLY and cut its
-        lineage (localCheckpoint): the build/merge plan references the
+        lineage (``materialize``): the build/merge plan references the
         table view and the write batch, and ``cache()`` is not enough —
         replacing the temp view at the next commit UNCACHES dependent
         plans, whose recompute would read vacuumed storage generations.
@@ -627,9 +624,9 @@ class Catalog:
             return  # adopted: LocalRelation, nothing to pin
         if kind == "bsi":
             frame, mv, nb = cat._bsi[f]
-            cat._bsi[f] = (frame.localCheckpoint(eager=True), mv, nb)
+            cat._bsi[f] = (materialize(frame, eager=True), mv, nb)
         else:
-            cat._indexes[f] = cat._indexes[f].localCheckpoint(eager=True)
+            cat._indexes[f] = materialize(cat._indexes[f], eager=True)
         cat.try_localize(f)
         cat._invalidate_field(f)
 

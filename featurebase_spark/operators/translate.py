@@ -8,7 +8,7 @@ the boltdb store persisting the mapping). Bitmap fragments only ever see
 integer ids; keys exist at the edges.
 
 Spark analogue: the mapping is a (key, id) DataFrame pinned in the block
-manager (localCheckpoint — same treatment as fragment frames), and
+manager (``materialize`` — same treatment as fragment frames), and
 allocation is hash-partitioned exactly like the reference: a new key hashes
 to one of ``PARTITIONS`` allocation partitions, takes the next sequence
 number there (``row_number`` within the partition — one task per
@@ -24,6 +24,8 @@ from __future__ import annotations
 from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+from featurebase_spark.materialize import materialize
 
 
 class KeyTranslator:
@@ -91,7 +93,7 @@ class KeyTranslator:
             merged = self._map.unionByName(merged)
         # pin BEFORE reading the per-partition counts so allocation runs
         # exactly once (lineage-cut also protects against later view swaps)
-        pinned = merged.localCheckpoint(eager=True)
+        pinned = materialize(merged, eager=True)
         for r in (
             pinned.withColumn("p", F.floor(F.col("id") / F.lit(self.SPAN)))
             .groupBy("p")

@@ -921,108 +921,6 @@ def common_span_docs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    pairs: DataFrame,
-    nodes: DataFrame,
-    id_col: str = "doc_id",
-    max_iterations: int = 20,
-) -> DataFrame:
-    """Connected components over an undirected pair list — the step that
-    turns near-dup PAIRS into dedup CLUSTERS (a chain a~b~c is ONE group
-    even when (a,c) was never emitted). Returns (id, component) where
-    component = the minimum id reachable from the node; docs in no pair
-    are their own singleton component.
-
-    Algorithm: iterative min-label propagation (the standard large-graph
-    CC: each round every node takes the min of its own label and its
-    neighbors' labels, until fixpoint). Each round is one join + one
-    groupBy — all hash-partitioned on the node id, so successive rounds
-    reuse the same partitioning; rounds needed = graph diameter, and
-    near-dup clusters are short chains (a handful of rounds). The loop
-    is driver-side CONTROL only — no data ever collects; the fixpoint
-    test is a count of changed labels (reference analogue: dedup has no
-    clustering step — a genuine extension a training pipeline needs).
-
-    The loop ALWAYS runs to the fixpoint: min-label propagation is
-    monotone over a finite graph, so it terminates in ≤ diameter rounds.
-    ``max_iterations`` is a soft expectation, not a truncation — a
-    corpus whose duplicate chains exceed it just keeps iterating (each
-    extra round is one cheap re-partitioned join), with a warning so
-    pathological graph shapes are visible. Truncating instead would
-    silently split one true cluster into several "canonical" docs —
-    silent duplicate retention."""
-    # symmetrize in ONE pass over the pair subtree (graph._symmetrize):
-    # the union form instantiated the whole upstream pair derivation
-    # (minhash → LSH → verify) once per leg, so the edge
-    # materialization computed it twice (r14; guide §1.2)
-    from featurebase_spark.pipeline.graph import _symmetrize
-
-    edges = _symmetrize(
-        pairs.select(
-            F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-        ),
-        "src",
-        "dst",
-    ).distinct()
-    # the edge list is re-read every round: materialize it once, or
-    # each round replays the whole upstream pair pipeline
-    # (minhash → LSH → verify) inside its join (r13; guide §2.4)
-    edges = materialize(edges)
-    labels = nodes.select(
-        F.col(id_col).alias("node"), F.col(id_col).alias("component")
-    )
-    rounds = 0
-    while True:
-        rounds += 1
-        neighbor_min = (
-            edges.join(
-                labels.withColumnRenamed("node", "dst"), "dst"
-            )
-            .groupBy("src")
-            .agg(F.min("component").alias("nbr_component"))
-            .withColumnRenamed("src", "node")
-        )
-        new_comp = F.least(
-            F.col("component"),
-            F.coalesce(F.col("nbr_component"), F.col("component")),
-        )
-        # the chg flag rides INSIDE the checkpointed frame (the
-        # graph.py loop's r10 fix, ported r13): the fixpoint test scans
-        # already-materialized rows instead of re-joining new labels
-        # against old — one join job fewer per round
-        new_labels = (
-            labels.join(neighbor_min, "node", "left")
-            .select(
-                "node",
-                new_comp.alias("component"),
-                (new_comp != F.col("component")).alias("__chg"),
-            )
-        )
-        # LAZY materialize + count as the materializing action (the
-        # graph.py r14 fusion): one job persists the round's labels AND
-        # returns the fixpoint count. The count must cover EVERY
-        # partition — the former limit(1) probe would let the first job
-        # skip partitions, leaving unmaterialized blocks behind a
-        # truncated lineage — so it is a full count, still over rows
-        # this job computes anyway.
-        new_labels = materialize(new_labels)  # cut lineage
-        changed = new_labels.where("__chg").count()
-        labels = new_labels.select("node", "component")
-        if changed == 0:
-            break
-        if rounds == max_iterations:
-            import warnings
-
-            warnings.warn(
-                f"connected_components: not converged after {rounds} "
-                "rounds (duplicate-chain diameter exceeds max_iterations); "
-                "continuing to the fixpoint",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    return labels.select(F.col("node").alias(id_col), "component")
-
-
 def neardup_canonical(
     df: DataFrame,
     text_col: str = "text",
@@ -1035,11 +933,19 @@ def neardup_canonical(
     """The dedup pipeline's END STATE: MinHash→LSH→verified pairs →
     connected components → (id, component, is_canonical) — canonical =
     the min id of each near-dup cluster; a training pipeline keeps
-    ``is_canonical`` rows and drops the rest."""
+    ``is_canonical`` rows and drops the rest.
+
+    The closure is ``pipeline.graph.connected_components``, the one CC
+    operator: min-label propagation with pointer jumping, one join and
+    one groupBy per round over the paired docs only, and a hard failure
+    if it does not converge (never a silent truncation that would split
+    one cluster into several "canonical" docs)."""
+    from featurebase_spark.pipeline.graph import connected_components
+
     prs = minhash_dedup_pairs(
         df, text_col, id_col, num_hashes, bands, shingle_n, threshold
     )
-    comp = connected_components(prs, df.select(id_col), id_col)
+    comp = connected_components(df.select(id_col), prs, id_col, "id_a", "id_b")
     return comp.select(
         id_col,
         "component",

@@ -11,36 +11,51 @@ pipeline bolts on (cf. the large-star/small-star MapReduce formulation,
 Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14).
 
-Algorithm: min-label propagation with POINTER JUMPING (path doubling).
-Each node carries a component label (the smallest node id it has seen);
-every round does
+Algorithm: min-label propagation with POINTER JUMPING. Each node
+carries a component label (a node id of its component, never above its
+own id); every round computes
 
-1. neighbor relax: ``comp'(u) = min(comp(u), min over neighbors v of
-   comp(v))`` — one join of the symmetrized edge list against the label
-   frame plus one groupBy, both keyed on a single long id;
-2. pointer jump: ``comp''(u) = min(comp'(u), comp'(comp'(u)))`` — one
-   self-join of the label frame. Because labels are themselves node
-   ids, jumping halves the pointer-chain depth every round, so
-   convergence is O(log diameter) rounds instead of O(diameter) — the
-   difference between 20 and a million shuffles on a chain-shaped
-   100 TB graph.
+    comp'(u) = min(comp(comp(u)), min over neighbors v of comp(v))
 
-Every shuffle carries two longs per node; text/payloads never enter the
-loop. Labels are localCheckpoint-ed each round so round i+1's plan does
-not replay rounds 1..i (lineage would otherwise grow linearly and the
-py4j plan quadratically). The fixpoint test is exact: COUNT of labels
-that changed this round — when it reaches zero the labels ARE the
-component minima (monotone non-increasing, bounded below by the true
-minimum, and a fixpoint of the relax step satisfies the local minimum
-condition everywhere, which on a connected subgraph forces the global
-minimum).
+as ONE join of the symmetrized edge list, extended with one pointer
+edge ``u → comp(u)`` per node, against the label frame, plus ONE
+groupBy — both keyed on a single id. The first round runs over every
+node and sets aside those with no edge; later rounds carry only the
+rest. ``comp(comp(u)) <= comp(u)``, so no label ever rises.
+
+The pointer edge is the jump: because labels are node ids, reading the
+label's own label doubles the distance a label travels along a chain
+every round, so a chain whose ids ascend along it closes in O(log
+length) rounds instead of O(length) (a 1024-node chain: 12 rounds, not
+1024). Ids scattered along a long path converge more slowly (a
+simulated 1024-node chain in random id order: ~200 rounds); near-dup
+clusters are short and close in two or three.
+
+Every shuffle carries two ids per row; text/payloads never enter the
+loop. The edge list and each round's labels are cut through
+:func:`~featurebase_spark.materialize.materialize`, so round i+1's plan
+does not replay rounds 1..i (lineage would otherwise grow linearly and
+the py4j plan quadratically) — and their durability is the session's
+materialize mode: ``reliable`` checkpoints every round to storage, so a
+lost executor resumes the loop from the last round instead of failing
+it. The fixpoint test is exact: COUNT of labels that changed this round
+— when it reaches zero every node's label equals each neighbor's (each
+side is at most the other), so it is constant on each component; it is
+a member id no larger than any member's id, i.e. the component minimum.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from featurebase_spark.materialize import materialize
+
 __all__ = ["connected_components"]
+
+
+def _col(name: str):
+    """A top-level column by its literal name (dots included)."""
+    return F.col("`" + name.replace("`", "``") + "`")
 
 
 def _symmetrize(e: DataFrame, s: str, t: str) -> DataFrame:
@@ -51,15 +66,21 @@ def _symmetrize(e: DataFrame, s: str, t: str) -> DataFrame:
     self-join + pair aggregate, or minhash → LSH → verify), so the
     symmetrized frame's materialization computed it twice (r14;
     guide §1.2 don't compute twice). The explode doubles rows inside
-    the same stage instead — identical output, half the subtree."""
+    the same stage instead — identical output, half the subtree.
+    Both endpoints are cast to their common type first, so the two
+    orientations build one struct type."""
+    a, b = _col(s), _col(t)
+    common = e.select(F.coalesce(a, b)).schema[0].dataType
+    a, b = a.cast(common), b.cast(common)
+    pair = F.col("__e")
     return e.select(
         F.explode(
             F.array(
-                F.struct(F.col(s), F.col(t)),
-                F.struct(F.col(t).alias(s), F.col(s).alias(t)),
+                F.struct(a.alias(s), b.alias(t)),
+                F.struct(b.alias(s), a.alias(t)),
             )
         ).alias("__e")
-    ).select(f"__e.{s}", f"__e.{t}")
+    ).select(pair.getField(s).alias(s), pair.getField(t).alias(t))
 
 
 def connected_components(
@@ -70,8 +91,6 @@ def connected_components(
     dst_col: str = "dst",
     max_iter: int = 64,
     shuffle_partitions: int | None = None,
-    checkpoint_dir: str | None = None,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Component label (= MIN node id in the component) for every node.
 
@@ -82,9 +101,10 @@ def connected_components(
     ``(node_col, component)``, both the node id type.
 
     Raises ``RuntimeError`` if the fixpoint is not reached within
-    ``max_iter`` rounds — with pointer jumping that bound allows
-    diameters up to ~2^max_iter, so hitting it means a bug, not a big
-    graph.
+    ``max_iter`` rounds (see the module docstring for round counts):
+    the loop never truncates, so a returned labelling is always the
+    exact closure. Edges with an endpoint outside ``nodes`` are
+    ignored.
 
     ``shuffle_partitions`` scopes ``spark.sql.shuffle.partitions`` for
     the loop's jobs (restored on exit) — the same sizing rule as
@@ -94,124 +114,84 @@ def connected_components(
     shuffles spends most of its time scheduling empty tasks). Leave
     None at production scale.
 
-    ``checkpoint_dir`` selects DURABILITY for the per-round lineage
-    truncation. Default (None) uses ``localCheckpoint``, which stores
-    the label blocks on EXECUTORS: lineage is truncated, so losing a
-    single executor mid-closure makes those blocks unrecoverable and
-    fails the whole job — fine on local[32], the wrong posture for a
-    multi-hour 100-TB closure on preemptible machines. Passing a
-    fault-tolerant path (HDFS/S3; sets the context's checkpoint dir if
-    unset) switches rounds on the ``checkpoint_every`` cadence to
-    RELIABLE ``df.checkpoint()`` — blocks land in storage, so the loop
-    restarts a lost task from the last reliable round instead of dying;
-    off-cadence rounds still localCheckpoint to keep plan growth
-    bounded without paying a storage write every round. Both paths run
-    the identical algebra — labels are bit-for-bit the same (tested).
+    Durability of the lineage cuts is not a parameter: it is the
+    session's :func:`~featurebase_spark.materialize.materialize` mode.
+    Every mode runs the identical algebra — labels are bit-for-bit the
+    same (tested).
     """
     if int(max_iter) < 1:
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    if int(checkpoint_every) < 1:
-        raise ValueError(
-            f"checkpoint_every must be >= 1, got {checkpoint_every}"
-        )
     spark = nodes.sparkSession
     if shuffle_partitions is not None:
         old = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(int(shuffle_partitions)))
         try:
             return connected_components(
-                nodes, edges, node_col, src_col, dst_col, max_iter, None,
-                checkpoint_dir, checkpoint_every,
+                nodes, edges, node_col, src_col, dst_col, max_iter
             )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", old)
-    if checkpoint_dir is not None:
-        # idempotent: only set the context checkpoint dir if absent —
-        # it is context-global, so never clobber a caller's choice
-        sc = spark.sparkContext
-        if sc._jsc.sc().getCheckpointDir().isEmpty():
-            sc.setCheckpointDir(checkpoint_dir)
     n = F.col(node_col)
-    all_nodes = nodes.where(n.isNotNull()).select(n.alias("node")).distinct()
+    lab = nodes.where(n.isNotNull()).select(n.alias("node"), n.alias("comp"))
+    node_type = lab.schema["node"].dataType
     e = (
         edges.select(F.col(src_col).alias("s"), F.col(dst_col).alias("t"))
         .where(F.col("s").isNotNull() & F.col("t").isNotNull())
     )
-    sym = (
-        _symmetrize(e, "s", "t")
-        .where(F.col("s") != F.col("t"))
-        .distinct()
-    )
-    # the edge list is reused every round: reliable-checkpoint it when a
-    # dir is given (losing its executor blocks would also kill the loop)
-    sym = (
-        sym.checkpoint(eager=False)
-        if checkpoint_dir is not None
-        else sym.localCheckpoint(eager=False)
-    )
-
-    all_nodes = all_nodes.localCheckpoint(eager=False)
-    # the loop only ever changes labels of nodes that HAVE an edge —
-    # isolated nodes are their own component by definition and would
-    # ride every round's joins/checkpoints as dead weight (in a dedup
-    # corpus most docs pair with nothing: here the label frame shrinks
-    # ~9× at the bench SF, and at 100 TB the loop shuffles track the
-    # duplicate surface, not the corpus). They rejoin once at the end
-    # (r13; guide §2.3 shuffle fewer bytes).
-    lab = all_nodes.join(
-        sym.select(F.col("s").alias("node")).distinct(), "node", "left_semi"
-    )
-    lab = lab.select("node", F.col("node").alias("comp"))
-    lab = lab.localCheckpoint(eager=False)
-    for i in range(int(max_iter)):
-        nbr = (
-            sym.join(lab.withColumnRenamed("node", "t"), "t")
-            .groupBy(F.col("s").alias("node"))
-            .agg(F.min("comp").alias("nbr_comp"))
+    # the edge list is re-read every round: cut it once, or each round
+    # replays the whole upstream pair pipeline inside its join
+    sym = materialize(
+        _symmetrize(e, "s", "t").where(F.col("s") != F.col("t")).distinct()
+    ).select("s", "t", F.lit(None).cast(node_type).alias("own"))
+    isolated = None
+    for _ in range(int(max_iter)):
+        # the pointer edge u → comp(u) carries u's current label in
+        # ``own`` (NULL on real edges): the groupBy yields the old label
+        # beside the new one, so the change flag needs no join
+        ptr = lab.select(
+            F.col("node").alias("s"),
+            F.col("comp").alias("t"),
+            F.col("comp").alias("own"),
         )
-        relaxed = (
-            lab.join(nbr, "node", "left")
+        new_lab = (
+            sym.unionByName(ptr)
+            .join(lab.withColumnRenamed("node", "t"), "t")
+            .groupBy(F.col("s").alias("node"))
+            .agg(
+                F.min("comp").alias("comp"),
+                F.max("own").alias("old"),
+                F.max(F.col("own").isNull()).alias("linked"),
+            )
+            # an edge endpoint outside ``nodes`` never gets a label
+            .where(F.col("old").isNotNull())
             .select(
                 "node",
-                F.col("comp").alias("comp0"),
-                F.least(
-                    "comp", F.coalesce("nbr_comp", "comp")
-                ).alias("comp"),
+                "comp",
+                (F.col("comp") != F.col("old")).alias("chg"),
+                "linked",
             )
         )
-        jump_map = relaxed.select(
-            F.col("node").alias("comp"), F.col("comp").alias("jumped")
-        )
-        new_comp = F.least("comp", F.coalesce("jumped", "comp"))
-        # the chg flag rides INSIDE the checkpointed frame, so the
-        # fixpoint test is a scan of already-materialized rows — no
-        # extra join job per round
-        new_lab = relaxed.join(jump_map, "comp", "left").select(
-            "node",
-            new_comp.alias("comp"),
-            (new_comp != F.col("comp0")).alias("chg"),
-        )
-        reliable = checkpoint_dir is not None and i % int(checkpoint_every) == 0
-        # LAZY checkpoint + count as the materializing action: the count
+        # LAZY materialize + count as the materializing action: the count
         # computes every partition (no limit/short-circuit — a partial
         # first job would leave checkpoint blocks unmaterialized behind
         # a truncated lineage), so one job both persists the round's
         # labels AND returns the fixpoint count — the eager form paid a
         # second scheduler round-trip per round to re-scan the
         # materialized rows (r14; guide §1.2 don't compute twice)
-        new_lab = (
-            new_lab.checkpoint(eager=False)
-            if reliable
-            else new_lab.localCheckpoint(eager=False)
-        )
+        new_lab = materialize(new_lab)
         changed = new_lab.where("chg").count()
-        lab = new_lab.select("node", "comp")
+        if isolated is None:
+            # nodes with no edge are their own component: they leave the
+            # loop after the first round instead of riding every later
+            # round's shuffles (in a dedup corpus most docs pair with
+            # nothing, so the loop tracks the duplicate surface, not the
+            # corpus) and come back by a union, not a join
+            isolated = new_lab.where(~F.col("linked")).select("node", "comp")
+        lab = new_lab.where("linked").select("node", "comp")
         if changed == 0:
-            # isolated nodes rejoin as their own component (comp NULL
-            # after the left join ⇔ the node had no edge)
-            return all_nodes.join(lab, "node", "left").select(
-                F.col("node").alias(node_col),
-                F.coalesce("comp", "node").alias("component"),
+            return lab.unionByName(isolated).select(
+                F.col("node").cast(node_type).alias(node_col),
+                F.col("comp").alias("component"),
             )
     raise RuntimeError(
         f"connected_components did not converge in {max_iter} rounds"

@@ -420,13 +420,3 @@ def sample_frame_stats(
     return df.select("media_id", "payload").mapInPandas(
         run, FRAME_STATS_SCHEMA
     )
-
-
-def media_stats(df: DataFrame) -> DataFrame:
-    """Metadata-only profile (never reads payloads thanks to column
-    pruning): count/size distribution per media_type."""
-    return df.groupBy("media_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.length("payload")).alias("total_bytes"),
-        F.avg(F.col("width") * F.col("height")).alias("avg_pixels"),
-    )

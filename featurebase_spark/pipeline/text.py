@@ -39,16 +39,6 @@ def token_count(col) -> Column:
     return F.size(tokens(col)).cast("long")
 
 
-def bpe_ish_token_count(col) -> Column:
-    """BPE-ish upper-bound token estimate: word-piece regex splits on
-    letter/digit/punctuation boundaries (the classic GPT-2 pre-tokenizer
-    shape) — still JVM-side regexp, no UDF."""
-    pieces = F.regexp_extract_all(
-        col, F.lit(r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]+"), 0
-    )
-    return F.size(pieces).cast("long")
-
-
 def char_count(col) -> Column:
     return F.length(col).cast("long")
 

@@ -24,6 +24,7 @@ from typing import Any, Optional
 
 from pyspark.sql import DataFrame
 
+from featurebase_spark.materialize import materialize
 from featurebase_spark.pql import calls as C
 
 _TOKEN_RE = re.compile(
@@ -1050,10 +1051,10 @@ def execute_all(
             # input twice (conditional update + create-if-absent
             # anti-join), so a k-write batch otherwise builds a
             # 2^k-node plan tree — a 15-write request OOMs the driver
-            # at ANALYSIS time. localCheckpoint materializes each
-            # write's result (the reference applies writes eagerly
-            # too, one mutation per call) and keeps batches linear.
-            out = out.localCheckpoint(eager=True)
+            # at ANALYSIS time. materialize() cuts each write's result
+            # (the reference applies writes eagerly too, one mutation
+            # per call) and keeps batches linear.
+            out = materialize(out, eager=True)
             cur = C.Index(
                 out,
                 id_col=cur.id_col,

@@ -19,6 +19,7 @@ from typing import Callable, Optional
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from featurebase_spark.materialize import materialize
 from featurebase_spark.session import load_tables
 from featurebase_spark.pql import (
     All,
@@ -1199,13 +1200,14 @@ def dedup_minhash_lsh(spark, sf_dir):
 )
 def dedup_cluster_canonical(spark, sf_dir):
     """The dedup pipeline's END STATE (pipeline/dedup.neardup_canonical):
-    verified near-dup pairs → CONNECTED COMPONENTS (iterative min-label
-    propagation, one join+groupBy per round, driver loop is control
-    only) → canonical assignment (component = min reachable id,
-    is_canonical marks the survivor). A chain a~b~c is ONE cluster even
-    though (a,c) was never a pair — DuckDB's recursive-CTE transitive
-    closure replays exactly that, so the hash match proves the iterative
-    distributed algorithm, not just the pair list."""
+    verified near-dup pairs → CONNECTED COMPONENTS (pipeline/graph:
+    min-label propagation with pointer jumping, one join + one groupBy
+    per round, driver loop is control only) → canonical assignment
+    (component = min reachable id, is_canonical marks the survivor). A
+    chain a~b~c is ONE cluster even though (a,c) was never a pair —
+    DuckDB's recursive-CTE transitive closure replays exactly that, so
+    the hash match proves the iterative distributed algorithm, not just
+    the pair list."""
     from featurebase_spark.pipeline.dedup import neardup_canonical
 
     docs = _tables(spark, sf_dir)["documents"]
@@ -5574,21 +5576,22 @@ def _trigram_postings(spark, sf_dir):
     measures exactly the probe path PERF_NOTES r12 identified as ~0.7s
     behind the 97%-of-total inline build.
 
-    Materialization is ``localCheckpoint``, NOT ``.cache()``: a cached
-    frame's logical plan stays visible to the CacheManager, which
-    substitutes it into ANY query whose plan fragment matches — the
-    inline ``like_trigram_search`` key builds postings with an
-    identical plan and was silently reading this cache instead of
-    building (r13 verdict, gaming flag). A checkpointed frame is an
-    ExistingRDD scan that no other query's plan can match, so the
-    inline key pays its own build again and this frame serves only the
-    explicit prebuilt consumers."""
+    Materialization is ``materialize()`` (a lineage cut), NOT
+    ``.cache()``: a cached frame's logical plan stays visible to the
+    CacheManager, which substitutes it into ANY query whose plan
+    fragment matches — the inline ``like_trigram_search`` key builds
+    postings with an identical plan and was silently reading this cache
+    instead of building. A checkpointed frame is an ExistingRDD scan
+    that no other query's plan can match, so the inline key pays its own
+    build again and this frame serves only the explicit prebuilt
+    consumers."""
     from featurebase_spark.pipeline.trigram import build_trigram_postings
 
     key = (id(spark), sf_dir)
     if key not in _TRIGRAM_POSTINGS:
         docs = _tables(spark, sf_dir)["documents"]
-        p = build_trigram_postings(docs, "doc_id", "text").localCheckpoint()
+        p = build_trigram_postings(docs, "doc_id", "text")
+        p = materialize(p, eager=True)
         _TRIGRAM_POSTINGS[key] = p
     return _TRIGRAM_POSTINGS[key]
 
@@ -6257,9 +6260,7 @@ def like_pattern_scan(spark, sf_dir):
     )
 
     docs = _tables(spark, sf_dir)["documents"]
-    postings = build_trigram_postings(docs, "doc_id", "text").localCheckpoint(
-        eager=False
-    )
+    postings = materialize(build_trigram_postings(docs, "doc_id", "text"))
     a = like_match(docs, "doc_id", "text", "the %big_vector%", postings)
     b = like_match(docs, "doc_id", "text", "the %merge%", postings)
     return (

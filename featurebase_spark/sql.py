@@ -94,12 +94,6 @@ _FROM_LIST_ENDERS = {
 }
 
 
-def _emit_word(tok: str, table_pos: bool = False) -> str:
-    """See :func:`_emit_word_ctx` — kept for arg-list emission where no
-    token lookahead context exists."""
-    return _emit_word_ctx(tok, table_pos=table_pos)
-
-
 def _emit_word_ctx(
     tok: str, table_pos: bool = False, qualifier: bool = False
 ) -> str:

@@ -3,6 +3,7 @@ from __future__ import annotations
 import os
 
 import pytest
+from _pytest.mark.expression import Expression
 
 from featurebase_spark.session import get_spark, load_tables
 
@@ -18,15 +19,32 @@ def pytest_collection_modifyitems(config, items):
     pass: ``FB_FULL_SUITE=1 python -m pytest tests/``, or select them
     explicitly with ``-m full``. Every surface they walk keeps a
     default-path smoke twin (dialect mirrors, golden tests, the
-    defs-corpus prefix slice)."""
-    if os.environ.get("FB_FULL_SUITE") or config.getoption("-m"):
+    defs-corpus prefix slice).
+
+    Any other ``-m`` expression leaves them skipped: ``-m "not slow"``
+    keeps a ``full`` item, but not because of the marker."""
+    if os.environ.get("FB_FULL_SUITE"):
         return
+    expr = config.getoption("-m")
+    expr = Expression.compile(expr) if expr else None
     skip = pytest.mark.skip(
         reason="full-suite battery: set FB_FULL_SUITE=1 or use -m full"
     )
     for it in items:
-        if "full" in it.keywords:
-            it.add_marker(skip)
+        if "full" not in it.keywords:
+            continue
+        if expr is not None and _selected_by_full(expr, it):
+            continue
+        it.add_marker(skip)
+
+
+def _selected_by_full(expr, item) -> bool:
+    """``expr`` keeps ``item`` with its ``full`` marker and drops it
+    without: the expression asks for the battery itself."""
+    marks = {m.name for m in item.iter_markers()}
+    return expr.evaluate(lambda name, **kw: name in marks) and not (
+        expr.evaluate(lambda name, **kw: name in marks - {"full"})
+    )
 
 
 @pytest.fixture(scope="session")

@@ -55,29 +55,36 @@ def test_max_iter_validation(spark):
 
 
 def test_reliable_checkpoint_identical_labels(spark, tmp_path):
-    """The reliable-checkpoint path (df.checkpoint to a fault-tolerant
-    dir — survives executor loss where localCheckpoint blocks do not)
-    runs the identical algebra: labels match the default path exactly,
-    and checkpoint data actually lands in the directory."""
+    """Under the ``reliable`` materialize mode (df.checkpoint to a
+    fault-tolerant dir — survives executor loss where localCheckpoint
+    blocks do not) the loop runs the identical algebra: labels match the
+    default path exactly, and checkpoint data actually lands in the
+    directory."""
     import os
+
+    from featurebase_spark.materialize import MODE_CONF
 
     nodes = list(range(40))
     edges = [(i, i + 1) for i in range(19)] + [(25, 30), (30, 39)]
     base = _cc(spark, nodes, edges)
     ckdir = str(tmp_path / "cc_ck")
-    # pin the context dir ourselves: connected_components deliberately
-    # never clobbers an existing context checkpoint dir, so if an
-    # earlier test set one this test would silently write THERE and the
-    # walk below would find nothing (order-dependent failure)
+    # pin the context dir ourselves: materialize() never clobbers an
+    # existing context checkpoint dir, so if an earlier test set one
+    # this test would silently write THERE and the walk below would
+    # find nothing (order-dependent failure)
     spark.sparkContext.setCheckpointDir(ckdir)
-    rel = _cc(
-        spark, nodes, edges, checkpoint_dir=ckdir, checkpoint_every=2
-    )
+    spark.conf.set(MODE_CONF, "reliable")
+    try:
+        rel = _cc(spark, nodes, edges)
+    finally:
+        spark.conf.unset(MODE_CONF)
     assert rel == base
     found = [f for _, _, fs in os.walk(ckdir) for f in fs]
-    assert found, "reliable checkpoint wrote nothing to checkpoint_dir"
+    assert found, "reliable checkpoint wrote nothing to the checkpoint dir"
 
 
-def test_reliable_checkpoint_every_validation(spark):
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        _cc(spark, [1, 2], [(1, 2)], checkpoint_dir="/tmp/x", checkpoint_every=0)
+def test_edges_outside_nodes_ignored(spark):
+    """An edge endpoint missing from ``nodes`` gets no label and bridges
+    nothing: 1 and 3 meet only through 2, which is not a node."""
+    got = _cc(spark, [1, 3, 4], [(1, 2), (2, 3), (3, 4)])
+    assert got == {1: 1, 3: 3, 4: 3}

@@ -104,15 +104,16 @@ def test_components_empty_edges_short_circuits(spark):
 
 
 def test_minhash_cc_edge_list_materializes_once(spark):
-    """dedup.connected_components: each round's neighbor join must read
-    the checkpointed edge RDD, not replay the upstream pair pipeline."""
-    from featurebase_spark.pipeline.dedup import connected_components
+    """graph.connected_components over (id_a, id_b) pairs — the MinHash
+    tier's call shape: each round's neighbor join must read the
+    materialized edge RDD, not replay the upstream pair pipeline."""
+    from featurebase_spark.pipeline.graph import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (7, 8)], ["id_a", "id_b"]
     )
     nodes = spark.range(1, 10).select(F.col("id").alias("doc_id"))
-    out = connected_components(pairs, nodes)
+    out = connected_components(nodes, pairs, "doc_id", "id_a", "id_b")
     got = {r["doc_id"]: r["component"] for r in out.collect()}
     assert got[1] == got[2] == got[3] == 1
     assert got[7] == got[8] == 7

@@ -9,7 +9,30 @@ from __future__ import annotations
 
 import datetime
 
+import pytest
 from pyspark.sql import functions as F
+
+
+def _jobs_run_by(spark, action):
+    """Run ``action()`` under a job group of its own; return how many
+    Spark jobs it ran. Counting the group's jobs, not a before/after
+    delta of the tracker's ungrouped list, keeps the probe exact late
+    in a long session: that list only holds the jobs the tracker still
+    retains (~1000), so its delta goes negative."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _plan(df) -> str:
@@ -102,8 +125,8 @@ def test_prebuilt_trigram_postings_not_cache_substitutable(spark, tables):
 
 class TestMaterializePosture:
     """materialize() picks durability from session conf: local (default,
-    localCheckpoint), reliable (df.checkpoint into a checkpoint dir),
-    disk (persist DISK_ONLY, lineage kept). Same rows in every mode."""
+    localCheckpoint) or reliable (df.checkpoint into a checkpoint dir).
+    Both cut lineage; same rows in every mode."""
 
     def _frame(self, spark):
         return (
@@ -118,19 +141,6 @@ class TestMaterializePosture:
 
         m = materialize(self._frame(spark))
         assert "ExistingRDD" in _plan(m)
-
-    def test_disk_mode_keeps_lineage_same_rows(self, spark):
-        from featurebase_spark.materialize import MODE_CONF, materialize
-
-        base = {tuple(r) for r in self._frame(spark).collect()}
-        spark.conf.set(MODE_CONF, "disk")
-        try:
-            m = materialize(self._frame(spark), eager=True)
-            assert "ExistingRDD" not in _plan(m)  # lineage kept
-            assert {tuple(r) for r in m.collect()} == base
-        finally:
-            spark.conf.unset(MODE_CONF)
-            m.unpersist()
 
     def test_reliable_mode_checkpoints_to_dir(self, spark, tmp_path):
         import os
@@ -168,14 +178,13 @@ class TestMaterializePosture:
     def test_bad_mode_rejected(self, spark):
         from featurebase_spark.materialize import MODE_CONF, materialize
 
-        spark.conf.set(MODE_CONF, "replicate")
-        try:
-            import pytest
-
-            with pytest.raises(ValueError, match="expected one of"):
-                materialize(self._frame(spark))
-        finally:
-            spark.conf.unset(MODE_CONF)
+        for mode in ("replicate", "disk"):
+            spark.conf.set(MODE_CONF, mode)
+            try:
+                with pytest.raises(ValueError, match="expected one of"):
+                    materialize(self._frame(spark))
+            finally:
+                spark.conf.unset(MODE_CONF)
 
 
 class TestSmallIndexPinSkip:
@@ -198,11 +207,6 @@ class TestSmallIndexPinSkip:
         fb_sql(spark, f"insert into {name} values {seed}", catalog=cat)
         return cat
 
-    def _njobs(self, spark):
-        return len(
-            list(spark._jsc.sc().statusTracker().getJobIdsForGroup(None))
-        )
-
     def test_small_storage_signal(self, spark):
         cat = self._mk(spark, "t_pin_sig")
         assert cat._small_storage("t_pin_sig") is True
@@ -213,9 +217,10 @@ class TestSmallIndexPinSkip:
         from featurebase_spark.sql import fb_sql
 
         cat = self._mk(spark, "t_pin_a")
-        a = self._njobs(spark)
-        fb_sql(spark, "create index on t_pin_a (e, v)", catalog=cat)
-        hint_jobs = self._njobs(spark) - a
+        hint_jobs = _jobs_run_by(
+            spark,
+            lambda: fb_sql(spark, "create index on t_pin_a (e, v)", catalog=cat),
+        )
         bc = cat._bitmap["t_pin_a"]
         assert bc.is_local("e") and bc.is_local("v")
 
@@ -224,9 +229,10 @@ class TestSmallIndexPinSkip:
         cat2 = self._mk(spark, "t_pin_b")
         orig = cat2._small_storage
         cat2._small_storage = lambda name, cap_bytes=8 << 20: False
-        a = self._njobs(spark)
-        fb_sql(spark, "create index on t_pin_b (e, v)", catalog=cat2)
-        nohint_jobs = self._njobs(spark) - a
+        nohint_jobs = _jobs_run_by(
+            spark,
+            lambda: fb_sql(spark, "create index on t_pin_b (e, v)", catalog=cat2),
+        )
         cat2._small_storage = orig
         assert hint_jobs < nohint_jobs, (hint_jobs, nohint_jobs)
 
@@ -307,9 +313,9 @@ def test_cc_fixpoint_count_fused_into_checkpoint_job(spark):
     the materializing action — one job per round both persists the
     labels and returns the fixpoint count, where the eager form paid a
     second scheduler round-trip per round to re-scan materialized rows.
-    An 8-chain converges in 4 rounds: this probe measured 45 jobs fused
-    vs 49 with the per-round count job (same session shape), so the
-    bound below fails if a separate count job per round ever returns.
+    An 8-chain closes in 5 rounds and 32 jobs with one join per round;
+    the bound stays at the 47 set for the earlier two-join round (45
+    jobs fused vs 49 with a per-round count job).
     The count must stay FULL (no limit/short-circuit): a partial first
     job would leave checkpoint blocks unmaterialized behind truncated
     lineage — the r13 measured failure mode of the naive lazy fusion —
@@ -321,14 +327,17 @@ def test_cc_fixpoint_count_fused_into_checkpoint_job(spark):
     edf = spark.createDataFrame(
         [(i, i + 1) for i in range(7)], "src long, dst long"
     )
-    tracker = spark._jsc.sc().statusTracker()
-    before = len(list(tracker.getJobIdsForGroup(None)))
-    out = connected_components(ndf, edf, shuffle_partitions=4).collect()
-    jobs = len(list(tracker.getJobIdsForGroup(None))) - before
+    out = []
+    jobs = _jobs_run_by(
+        spark,
+        lambda: out.extend(
+            connected_components(ndf, edf, shuffle_partitions=4).collect()
+        ),
+    )
     assert {r["node"]: r["component"] for r in out} == {
         i: 0 for i in range(8)
     }
-    assert jobs <= 47, f"CC closure ran {jobs} jobs (fused form: ~45)"
+    assert jobs <= 47, f"CC closure ran {jobs} jobs (one-join form: ~32)"
 
 
 def test_cc_symmetrize_single_pass_no_union(spark):
@@ -354,3 +363,13 @@ def test_cc_symmetrize_single_pass_no_union(spark):
     rows = {(r["s"], r["t"]) for r in _symmetrize(base, "s", "t").collect()}
     want = {(i, i + 1) for i in range(10)}
     assert rows == want | {(b, a) for a, b in want}
+    # a dotted column name is one top-level column, not a field path,
+    # and an int/long endpoint pair meets on the common (long) type
+    mixed = spark.createDataFrame(
+        [(1, 2), (3, 4)], "`doc.a` int, `doc.b` long"
+    )
+    sym = _symmetrize(mixed, "doc.a", "doc.b")
+    assert [f.dataType.simpleString() for f in sym.schema] == ["bigint"] * 2
+    assert sym.columns == ["doc.a", "doc.b"]
+    got = {(r[0], r[1]) for r in sym.collect()}
+    assert got == {(1, 2), (2, 1), (3, 4), (4, 3)}

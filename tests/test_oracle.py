@@ -18,7 +18,14 @@ def duck():
 
 @pytest.mark.parametrize("name", sorted(Q.SPARK_QUERIES))
 def test_oracle_match(name, spark, tables, duck):
-    sp = Q.SPARK_QUERIES[name](spark, SF_DIR).toPandas()
+    df = Q.SPARK_QUERIES[name](spark, SF_DIR)
+    sp = df.toPandas()
+    # No key reads a cache on purpose, so an InMemoryTableScan in the plan
+    # toPandas just ran (no extra Spark job) means an earlier frame's
+    # cached plan was substituted into this key's: the trigram postings
+    # and the minhash shingles once did exactly that.
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "InMemoryTableScan" not in plan, f"{name}: cached scan\n{plan}"
     if name not in Q.ORACLE_SQL:
         pytest.skip("rows-only check (no SQL-expressible oracle)")
     du = duck.sql(Q.ORACLE_SQL[name]).df()
@@ -49,5 +56,5 @@ def test_bench_json_line_fits_driver_tail_buffer():
     # model 999.99 per key and the total at 99999.9999, and assert
     # against the driver's 2000-char hard tail rather than a softer
     # number (59 keys -> 1878 at this width). bench.py's own runtime
-    # warning at 1800 chars and the tail-scrape fallback stay in place.
+    # warning at 1800 chars stays in place.
     assert len(line) < 2000, len(line)

@@ -663,7 +663,7 @@ def test_connected_components_chains_and_singletons(spark):
     """Pairs→clusters: a chain a~b~c~d is ONE component (min id label)
     even though only adjacent pairs exist; disjoint clusters stay
     separate; unpaired nodes are singletons."""
-    from featurebase_spark.pipeline.dedup import connected_components
+    from featurebase_spark.pipeline.graph import connected_components
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4),      # chain → component 1
@@ -675,7 +675,9 @@ def test_connected_components_chains_and_singletons(spark):
         [(i,) for i in (1, 2, 3, 4, 10, 11, 20, 21, 22, 99)], ["doc_id"]
     )
     got = {r["doc_id"]: r["component"]
-           for r in connected_components(pairs, nodes).collect()}
+           for r in connected_components(
+               nodes, pairs, "doc_id", "id_a", "id_b"
+           ).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 99: 99}
 
@@ -706,28 +708,24 @@ def test_neardup_canonical_end_state(docs):
 
 
 def test_connected_components_converges_past_max_iterations(spark):
-    """A duplicate chain LONGER than max_iterations still resolves to ONE
-    component: the loop runs to the fixpoint (truncating would silently
-    split the cluster — duplicate retention), warning on the way."""
-    import warnings
+    """A duplicate chain LONGER than the old dedup loop's soft
+    ``max_iterations`` (2) still resolves to ONE component: the loop
+    runs to the fixpoint (truncating would silently split the cluster —
+    duplicate retention)."""
+    from featurebase_spark.pipeline.graph import connected_components
 
-    from featurebase_spark.pipeline.dedup import connected_components
-
-    n = 9  # chain diameter 8 > max_iterations=2
+    n = 9  # chain diameter 8 > the old max_iterations=2
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(1, n)], ["id_a", "id_b"]
     )
     nodes = spark.createDataFrame([(i,) for i in range(1, n + 1)], ["doc_id"])
-    with warnings.catch_warnings(record=True) as w:
-        warnings.simplefilter("always")
-        got = {
-            r["doc_id"]: r["component"]
-            for r in connected_components(
-                pairs, nodes, max_iterations=2
-            ).collect()
-        }
+    got = {
+        r["doc_id"]: r["component"]
+        for r in connected_components(
+            nodes, pairs, "doc_id", "id_a", "id_b"
+        ).collect()
+    }
     assert got == {i: 1 for i in range(1, n + 1)}
-    assert any("not converged" in str(x.message) for x in w)
 
 
 def test_hash_tokens_long_blob_equality_classes():
