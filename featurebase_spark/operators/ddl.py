@@ -42,7 +42,10 @@ class Catalog:
     (:class:`~featurebase_spark.operators.writes.PartitionedUpsertTable`)
     and every later INSERT/DELETE rewrites ONLY the buckets its keys hash
     into — per-statement cost O(touched buckets), not O(table), the
-    reference's per-shard fragment merge on import (batch/batch.go).
+    reference's per-shard fragment merge on import (batch/batch.go),
+    written by at most ``defaultParallelism`` tasks (one file per
+    touched bucket either way). A literal batch (the statement door,
+    ``consume_spool``) commits in two Spark jobs.
     Pass ``bucketed=False`` to keep the r1 whole-generation-swap commit
     (fine for tiny in-session tables).
     """

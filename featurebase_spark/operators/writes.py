@@ -123,6 +123,34 @@ def _is_literal_plan(df: DataFrame) -> bool:
         return False
 
 
+def sql_literal(v) -> str:
+    """``v`` as a Spark SQL literal — the quoting every driver-built
+    statement-door plan shares (:func:`literal_frame`'s VALUES rows, the
+    literal-batch key filter of :class:`PartitionedUpsertTable`).
+    Supported: None/bool/int/float/str."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, float):
+        # repr(nan)/repr(inf) are not valid SQL literals; Spark spells
+        # non-finite doubles as quoted casts.
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return repr(v)
+    if isinstance(v, int):
+        return repr(v)
+    if isinstance(v, str):
+        # Spark's default parser honors backslash escapes inside string
+        # literals (spark.sql.parser.escapedStringLiterals=false), so a
+        # bare backslash must be doubled or 'C:\temp' silently becomes
+        # 'C:<TAB>emp' on commit (spool payloads carry paths/regexes).
+        return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+    raise TypeError(f"sql_literal cannot quote {type(v).__name__}")
+
+
 def literal_frame(spark, rows: list, schema) -> DataFrame:
     """Build a small batch as a VALUES-backed LocalRelation instead of
     ``createDataFrame`` (which routes through an RDD scan in classic
@@ -144,31 +172,8 @@ def literal_frame(spark, rows: list, schema) -> DataFrame:
         )
         return spark.sql(f"SELECT {nulls} WHERE 1=0")
 
-    def q(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            return "TRUE" if v else "FALSE"
-        if isinstance(v, float):
-            # repr(nan)/repr(inf) are not valid SQL literals; Spark spells
-            # non-finite doubles as quoted casts.
-            if math.isnan(v):
-                return "CAST('NaN' AS DOUBLE)"
-            if math.isinf(v):
-                return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
-            return repr(v)
-        if isinstance(v, int):
-            return repr(v)
-        if isinstance(v, str):
-            # Spark's default parser honors backslash escapes inside string
-            # literals (spark.sql.parser.escapedStringLiterals=false), so a
-            # bare backslash must be doubled or 'C:\temp' silently becomes
-            # 'C:<TAB>emp' on commit (spool payloads carry paths/regexes).
-            return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
-        raise TypeError(f"literal_frame cannot quote {type(v).__name__}")
-
     vals = ", ".join(
-        "(" + ", ".join(q(c) for c in r) + ")" for r in rows
+        "(" + ", ".join(sql_literal(c) for c in r) + ")" for r in rows
     )
     names = ", ".join(f"c{i}" for i in range(len(st.fields)))
     return spark.sql(f"SELECT {casts} FROM (VALUES {vals}) AS t({names})")
@@ -344,40 +349,72 @@ class PartitionedUpsertTable:
             "__bucket", F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.buckets))
         )
 
-    def _touched(self, batch: DataFrame) -> list[int]:
-        """Bucket ids a batch's keys hash into. A LITERAL batch (the
-        single-statement door shape — ``isLocal`` means collect needs no
-        executors) with a long/string key routes on the DRIVER via the
-        bit-exact :func:`spark_bucket` replica — the reference
-        coordinator's ``shard = id / ShardWidth`` arithmetic, saving the
-        distinct+exchange job a plan-side computation costs. Distributed
-        batches keep the aggregation (keys may be billions; never
-        collected)."""
+    def _touched(self, batch: DataFrame) -> tuple[list[int], list | None]:
+        """Bucket ids a batch's keys hash into, and the batch's keys when
+        they were collected. A LITERAL batch (the statement-door and
+        ``consume_spool`` shape: a LocalRelation, whose collect needs no
+        executors) with a long/string key collects its keys ONCE and
+        routes on the DRIVER via the bit-exact :func:`spark_bucket`
+        replica — the reference coordinator's ``shard = id / ShardWidth``
+        arithmetic, saving the distinct+exchange job a plan-side
+        computation costs; :meth:`upsert` and :meth:`delete_keys` reuse
+        the key list to filter the replaced rows without a join.
+        Distributed batches keep the aggregation and return ``None`` for
+        the keys (keys may be billions; never collected)."""
         dtype = dict(batch.dtypes).get(self.key)
         if dtype in ("bigint", "string") and _is_literal_plan(batch):
             # NULL keys included: _bucketed stages them into bucket
             # pmod(xxhash64(NULL)=seed 42, n), so the driver-computed set
             # must cover that bucket too or the staged rows would never
             # be repointed by the manifest commit (silent row drop).
-            ks = {r[0] for r in batch.select(self.key).collect()}
-            return sorted({spark_bucket(k, self.buckets) for k in ks})
+            keys = [r[0] for r in batch.select(self.key).collect()]
+            touched = sorted({spark_bucket(k, self.buckets) for k in set(keys)})
+            return touched, keys
         b = self._bucketed(batch.dropDuplicates([self.key]))
-        return [int(r[0]) for r in b.select("__bucket").distinct().collect()]
+        return [int(r[0]) for r in b.select("__bucket").distinct().collect()], None
+
+    def _without_keys(
+        self, current: DataFrame, batch: DataFrame, keys: list | None
+    ) -> DataFrame:
+        """``current`` minus the rows whose key occurs in ``batch``.
+        A distributed batch (``keys`` None) takes a broadcast left anti
+        join. A literal batch passes the keys :meth:`_touched` collected
+        and takes ONE SQL predicate built as a single expression string
+        (a per-key ``Column.isin`` costs a py4j round trip per key). The
+        predicate is null-safe like the join: NULL is left out of the
+        list (``NOT IN`` over a list holding NULL is never true, which
+        would drop every row) and NULL-key rows are kept (NULL never
+        equals a key)."""
+        if keys is None:
+            return current.join(
+                F.broadcast(batch.select(self.key)), self.key, "left_anti"
+            )
+        lits = [sql_literal(k) for k in set(keys) if k is not None]
+        if not lits:
+            return current
+        k = f"`{self.key}`"
+        return current.where(F.expr(f"{k} IS NULL OR {k} NOT IN ({', '.join(lits)})"))
 
     def _write_generation(
         self, bucketed: DataFrame, n_buckets_hint: int | None = None
     ) -> tuple[str, list[int]]:
         """Stage a generation dir; returns (gen name, bucket ids present).
-        Commits hash-place rows with a shuffle sized to the touched
-        bucket count (one compact file per bucket, no per-task file
-        spray). Point writes use the same shape: an earlier revision
-        narrow-``coalesce``d ≤4-bucket commits to skip the stage
-        boundary, but measured on literal-batch parents the coalesced
-        single-task write costs 4-7x the tiny shuffle (~4.5s vs ~0.6s
-        for a 55-row staged batch — the merged write plan loses its
+        Rows hash-place on ``__bucket`` through a shuffle of
+        ``min(touched, buckets, defaultParallelism)`` partitions: hash
+        partitioning puts each bucket in exactly ONE task, so every
+        bucket still gets one compact file, while the task count follows
+        the cores — a 34-bucket commit on 4 cores runs 4 write tasks,
+        not 16 or 34 (tasks beyond the cores only queue, each paying the
+        per-task fixed cost; on a cluster whose cores cover the bucket
+        count nothing changes). Point writes use the same shape: an
+        earlier revision narrow-``coalesce``d ≤4-bucket commits to skip
+        the stage boundary, but measured on literal-batch parents the
+        coalesced single-task write costs 4-7x the tiny shuffle (~4.5s vs
+        ~0.6s for a 55-row staged batch — the merged write plan loses its
         local-relation fast path), so the exchange wins at every n."""
         gen = "g_" + uuid.uuid4().hex[:12]
-        n = max(1, min(n_buckets_hint or self.buckets, self.buckets))
+        n = max(1, min(n_buckets_hint or self.buckets, self.buckets,
+                       self.spark.sparkContext.defaultParallelism))
         staged = bucketed.repartition(n, "__bucket")
         staged.write.mode("overwrite").partitionBy("__bucket").parquet(
             os.path.join(self.path, gen)
@@ -480,39 +517,42 @@ class PartitionedUpsertTable:
         ``update_cols`` as in :func:`merge_upsert` (partial-column INSERT
         keeps unlisted fields of existing rows).
 
+        A literal batch (see :meth:`_touched`) skips ``dropDuplicates``
+        when its collected keys are already unique and drops the replaced
+        rows with a key predicate (:meth:`_without_keys`), so the commit
+        is two Spark jobs: the staging shuffle's map stage and the write.
+        A distributed batch dedupes and takes a broadcast anti join.
+
         Commit is copy-on-write + manifest swap: the merged touched
         buckets stage into a fresh generation dir (the job reads the old
         files while writing — no in-place overwrite race), then ONE
         atomic manifest replace points the touched buckets at the new
         generation. A crash anywhere before the replace leaves readers on
         the old, fully consistent state."""
-        up = self._bucketed(updates.dropDuplicates([self.key]))
-        touched = self._touched(updates)
+        touched, keys = self._touched(updates)
+        if keys is None or len(set(keys)) < len(keys):
+            updates = updates.dropDuplicates([self.key])
         current = self._read_raw(touched)  # manifest-level pruned read
         if update_cols is not None:
-            cur = current.drop("__bucket")
-            merged_up = merge_upsert(cur, updates.dropDuplicates([self.key]),
+            merged_up = merge_upsert(current.drop("__bucket"), updates,
                                      self.key, update_cols)
             # merge_upsert already unioned kept+updates over touched buckets
             merged = self._bucketed(merged_up)
         else:
-            kept = current.join(
-                F.broadcast(up.select(self.key)), self.key, "left_anti"
-            )
-            merged = kept.unionByName(up)
+            kept = self._without_keys(current, updates, keys)
+            merged = kept.unionByName(self._bucketed(updates))
         return self._commit_touched(merged, touched)
 
     def delete_keys(self, keys: DataFrame) -> list[int]:
         """Delete whole records by key — reads and rewrites ONLY the
         buckets the deleted keys hash into (the per-shard delete of
         executeDeleteRecords, executor.go:9050-9320). A bucket whose
-        rows all die simply drops out of the manifest."""
-        k = self._bucketed(keys.select(self.key).dropDuplicates([self.key]))
-        touched = self._touched(keys)
-        current = self._read_raw(touched)
-        kept = current.join(
-            F.broadcast(k.select(self.key)), self.key, "left_anti"
-        )
+        rows all die simply drops out of the manifest. The deleted keys'
+        rows are dropped as in :meth:`upsert` (:meth:`_without_keys`)."""
+        touched, collected = self._touched(keys)
+        if collected is None:
+            keys = keys.select(self.key).dropDuplicates([self.key])
+        kept = self._without_keys(self._read_raw(touched), keys, collected)
         return self._commit_touched(kept, touched)
 
     def _commit_touched(self, merged: DataFrame, touched: list[int]) -> list[int]:

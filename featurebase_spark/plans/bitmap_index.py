@@ -703,12 +703,27 @@ class BitmapCatalog:
     def _local_relation(d: dict, is_bsi: bool, spark) -> DataFrame:
         """The dict's fragments as a LocalRelation DataFrame — the form
         every distributed consumer (joins, groupBys, the one-shuffle
-        serving path) reads; no lineage, nothing to pin."""
-        rows = [
-            (k, int(s), blob, _popcount(blob))
-            for (k, s), blob in sorted(d.items(), key=lambda kv: str(kv[0]))
-        ]
-        return spark.createDataFrame(rows, BSI_SCHEMA if is_bsi else INDEX_SCHEMA)
+        serving path) reads; no lineage, nothing to pin. Built from an
+        Arrow table: ``createDataFrame`` of a Python list builds a
+        ``LogicalRDD`` in a classic session, whose every collect runs a
+        defaultParallelism-task Python job; the Arrow table becomes a
+        LocalRelation (collect with no job), whatever the session's
+        Arrow conf."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        schema = BSI_SCHEMA if is_bsi else INDEX_SCHEMA
+        items = sorted(d.items(), key=lambda kv: str(kv[0]))
+        cols = (
+            [k for (k, _), _ in items],
+            [int(s) for (_, s), _ in items],
+            [blob for _, blob in items],
+            [_popcount(blob) for _, blob in items],
+        )
+        table = pa.Table.from_pydict(
+            dict(zip(schema.names, cols)), schema=to_arrow_schema(schema)
+        )
+        return spark.createDataFrame(table, schema)
 
     def _spill_local(self, field: str) -> None:
         """Drop the dict (the LocalRelation frame stays valid) — the field

@@ -22,8 +22,22 @@ from __future__ import annotations
 
 from typing import Optional
 
+from pyspark.sql import DataFrame
+
 from featurebase_spark.plans import bitmap_index as B
 from featurebase_spark.pql import calls as C
+
+
+def scalar_frame(spark, pairs) -> DataFrame:
+    """One row of routed scalars, ``pairs`` = ``(name, value, sql_type)``,
+    as a VALUES LocalRelation: collecting it runs no Spark job. A bare
+    ``SELECT CAST(v AS T)`` plans as a Project over OneRowRelation, whose
+    collect still schedules a 1-task job (~40 ms against ~13 ms)."""
+    vals = ", ".join(
+        f"CAST({'NULL' if v is None else v} AS {t})" for _, v, t in pairs
+    )
+    names = ", ".join(f"`{name}`" for name, _, _ in pairs)
+    return spark.sql(f"SELECT * FROM VALUES ({vals}) AS t({names})")
 
 
 def to_bitmap_expr(cat: B.BitmapCatalog, call: C.RowCall):

@@ -859,24 +859,18 @@ def _route_reader(cat, node, idx: C.Index) -> Optional[DataFrame]:
     the SAME result schema as the scan path; None → not covered, caller
     scans. Scalars come back to the coordinator (the reference's
     scatter/gather merges per-shard scalars there too), so results are
-    LocalRelations — no job at all for cached fragments."""
+    VALUES LocalRelations (:func:`~featurebase_spark.plans.router.scalar_frame`)
+    — no job at all for cached fragments."""
     from featurebase_spark.plans import router
     from featurebase_spark.plans.bitmap_index import Cmp
 
     spark = idx.df.sparkSession
 
-    def lit_frame(pairs) -> DataFrame:
-        cols = ", ".join(
-            f"CAST({'NULL' if v is None else v} AS {t}) AS {name}"
-            for name, v, t in pairs
-        )
-        return spark.sql(f"SELECT {cols}")
-
     if isinstance(node, C.Count):
         expr = router.to_bitmap_expr(cat, node.child)
         if expr is None:
             return None
-        return lit_frame([("count", cat.count(expr), "BIGINT")])
+        return router.scalar_frame(spark, [("count", cat.count(expr), "BIGINT")])
     if isinstance(node, (C.Sum, C.Min, C.Max, C.Percentile)):
         if node.field not in cat._bsi:
             return None
@@ -892,11 +886,12 @@ def _route_reader(cat, node, idx: C.Index) -> Optional[DataFrame]:
             from featurebase_spark.plans.bitmap_index import And as BAnd
 
             n = cat.count(BAnd(exists, filt) if filt is not None else exists)
-            return lit_frame(
+            return router.scalar_frame(
+                spark,
                 [
                     ("sum", cat.bsi_sum(node.field, filt), "BIGINT"),
                     ("count", n, "BIGINT"),
-                ]
+                ],
             )
         if isinstance(node, (C.Min, C.Max)):
             # ValCount shape: the extreme AND how many records hold it
@@ -913,10 +908,11 @@ def _route_reader(cat, node, idx: C.Index) -> Optional[DataFrame]:
                 from featurebase_spark.plans.bitmap_index import And as BAnd2
 
                 cnt = cat.count(BAnd2(eq, filt) if filt is not None else eq)
-            return lit_frame(
-                [(name, val, "BIGINT"), ("count", cnt, "BIGINT")]
+            return router.scalar_frame(
+                spark, [(name, val, "BIGINT"), ("count", cnt, "BIGINT")]
             )
-        return lit_frame(
+        return router.scalar_frame(
+            spark,
             [
                 (
                     "percentile",

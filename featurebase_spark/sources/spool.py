@@ -50,6 +50,9 @@ class SpoolSource:
         self.spool_dir = spool_dir
         self.group_dir = group_dir or os.path.join(spool_dir, "_consumer_group")
         os.makedirs(self.group_dir, exist_ok=True)
+        #: segment file name -> its record count, filled when a read
+        #: reaches the segment's end (segments are immutable once visible)
+        self._counts: dict[str, int] = {}
 
     # -- producer side (tests / simulated topic) --
 
@@ -86,18 +89,27 @@ class SpoolSource:
 
     def records(self, from_offset: Optional[int] = None) -> Iterator[tuple]:
         """Record() loop: yields (offset, record_dict) from ``from_offset``
-        (default: the committed offset) across all visible segments."""
+        (default: the committed offset) across all visible segments.
+        A segment whose records all lie before the start offset is
+        skipped unopened once its record count is known, so a call costs
+        O(records from the start offset), not O(all records spooled)."""
         start = self.committed_offset() if from_offset is None else from_offset
         off = 0
         for fname in sorted(os.listdir(self.spool_dir)):
             if not fname.endswith(".ndjson"):
                 continue
+            n = self._counts.get(fname)
+            if n is not None and off + n <= start:
+                off += n
+                continue
+            first = off
             with open(os.path.join(self.spool_dir, fname)) as fh:
                 for line in fh:
                     if line.strip():
                         if off >= start:
                             yield off, json.loads(line)
                         off += 1
+            self._counts[fname] = off - first
 
 
 def consume_spool(

@@ -2052,8 +2052,11 @@ def _route_simple_agg(
         fn = {"SUM": cat.bsi_sum, "MIN": cat.bsi_min, "MAX": cat.bsi_max}[agg]
         val = fn(f, expr)
         name = alias or f"{agg.lower()}({f})"
-    lit = "NULL" if val is None else str(int(val))
-    return spark.sql(f"SELECT CAST({lit} AS BIGINT) AS `{name}`")
+    from featurebase_spark.plans.router import scalar_frame
+
+    return scalar_frame(
+        spark, [(name, None if val is None else int(val), "BIGINT")]
+    )
 
 
 #: reference binary-operator TYPE RULES (sql3/test/defs/defs_binops.go —

@@ -55,5 +55,33 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def jobs_run_by(spark):
+    """``jobs_run_by(action)`` runs ``action()`` under a job group of its
+    own and returns how many Spark jobs it ran. Counting the group's
+    jobs, not a before/after delta of the tracker's ungrouped list,
+    keeps the probe exact late in a long session: that list only holds
+    the jobs the tracker still retains (~1000), so its delta goes
+    negative."""
+    import uuid
+
+    sc = spark.sparkContext
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+
+    def run(action) -> int:
+        saved = {k: sc.getLocalProperty(k) for k in keys}
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            for k, v in saved.items():
+                sc.setLocalProperty(k, v)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
 def tables(spark):
     return load_tables(spark, SF_DIR)

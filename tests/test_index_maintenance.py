@@ -492,6 +492,64 @@ class TestLocalTier:
                       catalog=cat).first()[0] == 2
         cat.drop_table("loc_t")
 
+    def test_local_field_frame_collects_without_a_job(self, spark, jobs_run_by):
+        """A driver-local field's fragment frame is a LocalRelation:
+        collecting it (eq and BSI fields alike) runs no Spark job."""
+        cat = Catalog(spark)
+        fb_sql(spark, "create table loc_j (_id id, e string, "
+               "v int min 0 max 100)", catalog=cat)
+        fb_sql(spark, "insert into loc_j values (1, 'a', 5), (2, 'b', 7), "
+               "(3, 'a', 9)", catalog=cat)
+        fb_sql(spark, "create index on loc_j (e, v)", catalog=cat)
+        bm = cat.bitmap_catalog("loc_j")
+        assert bm.is_local("e") and bm.is_local("v")
+        for frame in (bm._indexes["e"], bm._bsi["v"][0]):
+            plan = frame._jdf.queryExecution().optimizedPlan()
+            assert plan.getClass().getSimpleName() == "LocalRelation"
+            rows = []
+            assert jobs_run_by(lambda: rows.extend(frame.collect())) == 0
+            assert rows
+        cat.drop_table("loc_j")
+
+    def test_routed_scalar_answers_run_no_job(self, spark, jobs_run_by):
+        """Routed scalar answers over driver-local fragments are VALUES
+        LocalRelations: planning and collecting a routed SQL COUNT/SUM
+        or PQL Count/Sum/Min/Max/Percentile runs no Spark job, and the
+        answer equals the scan path's."""
+        cat = Catalog(spark)
+        fb_sql(spark, "create table loc_r (_id id, e string, "
+               "v int min 0 max 100)", catalog=cat)
+        fb_sql(spark, "insert into loc_r values " + ", ".join(
+            f"({i}, '{'ab'[i % 2]}', {i * 7 % 50})" for i in range(20)
+        ), catalog=cat)
+        fb_sql(spark, "create index on loc_r (e, v)", catalog=cat)
+        bm = cat.bitmap_catalog("loc_r")
+        assert bm.is_local("e") and bm.is_local("v")
+        scan = spark.table("loc_r")
+        for q, want in (
+            ("select count(*) from loc_r where e = 'a'",
+             scan.where("e = 'a'").count()),
+            ("select sum(v) from loc_r where e = 'b'",
+             scan.where("e = 'b'").agg(F.sum("v")).first()[0]),
+        ):
+            fb_sql(spark, q, catalog=cat).collect()  # warm the fragment cache
+            got = []
+            jobs = jobs_run_by(
+                lambda: got.extend(fb_sql(spark, q, catalog=cat).collect())
+            )
+            assert (jobs, got[0][0]) == (0, want), q
+        idx = C.Index(scan)
+        for q in ('Count(Row(e="a"))', "Sum(field=v)", "Min(field=v)",
+                  "Max(field=v)", "Percentile(field=v, nth=50)"):
+            want = execute(idx, q).collect()
+            execute(idx, q, bitmap=bm).collect()
+            got = []
+            jobs = jobs_run_by(
+                lambda: got.extend(execute(idx, q, bitmap=bm).collect())
+            )
+            assert (jobs, got) == (0, want), q
+        cat.drop_table("loc_r")
+
 
 class TestIndexPersistence:
     def test_save_load_roundtrip(self, spark, tmp_path):

@@ -13,28 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 
-def _jobs_run_by(spark, action):
-    """Run ``action()`` under a job group of its own; return how many
-    Spark jobs it ran. Counting the group's jobs, not a before/after
-    delta of the tracker's ungrouped list, keeps the probe exact late
-    in a long session: that list only holds the jobs the tracker still
-    retains (~1000), so its delta goes negative."""
-    import uuid
-
-    sc = spark.sparkContext
-    keys = ("spark.jobGroup.id", "spark.job.description",
-            "spark.job.interruptOnCancel")
-    saved = {k: sc.getLocalProperty(k) for k in keys}
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        for k, v in saved.items():
-            sc.setLocalProperty(k, v)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _plan(df) -> str:
     return df._jdf.queryExecution().explainString(
         df.sparkSession._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -213,12 +191,11 @@ class TestSmallIndexPinSkip:
         assert cat._small_storage("no_such_table") is False
         cat.drop_table("t_pin_sig")
 
-    def test_small_create_index_localizes_without_pin_job(self, spark):
+    def test_small_create_index_localizes_without_pin_job(self, spark, jobs_run_by):
         from featurebase_spark.sql import fb_sql
 
         cat = self._mk(spark, "t_pin_a")
-        hint_jobs = _jobs_run_by(
-            spark,
+        hint_jobs = jobs_run_by(
             lambda: fb_sql(spark, "create index on t_pin_a (e, v)", catalog=cat),
         )
         bc = cat._bitmap["t_pin_a"]
@@ -229,8 +206,7 @@ class TestSmallIndexPinSkip:
         cat2 = self._mk(spark, "t_pin_b")
         orig = cat2._small_storage
         cat2._small_storage = lambda name, cap_bytes=8 << 20: False
-        nohint_jobs = _jobs_run_by(
-            spark,
+        nohint_jobs = jobs_run_by(
             lambda: fb_sql(spark, "create index on t_pin_b (e, v)", catalog=cat2),
         )
         cat2._small_storage = orig
@@ -308,14 +284,14 @@ def test_fuzzy_join_no_nested_loop_single_distinct(spark, tables):
     assert tree.count("HashAggregate") == 2, tree
 
 
-def test_cc_fixpoint_count_fused_into_checkpoint_job(spark):
+def test_cc_fixpoint_count_fused_into_checkpoint_job(spark, jobs_run_by):
     """r14 (9409b47): each CC round's lazy checkpoint + FULL count is
     the materializing action — one job per round both persists the
     labels and returns the fixpoint count, where the eager form paid a
     second scheduler round-trip per round to re-scan materialized rows.
-    An 8-chain closes in 5 rounds and 32 jobs with one join per round;
-    the bound stays at the 47 set for the earlier two-join round (45
-    jobs fused vs 49 with a per-round count job).
+    An 8-chain closes in 5 rounds and 32 jobs with one join per round
+    (measured alone and late in the full suite alike); the earlier
+    two-join round ran 45 fused, 49 with a per-round count job.
     The count must stay FULL (no limit/short-circuit): a partial first
     job would leave checkpoint blocks unmaterialized behind truncated
     lineage — the r13 measured failure mode of the naive lazy fusion —
@@ -328,8 +304,7 @@ def test_cc_fixpoint_count_fused_into_checkpoint_job(spark):
         [(i, i + 1) for i in range(7)], "src long, dst long"
     )
     out = []
-    jobs = _jobs_run_by(
-        spark,
+    jobs = jobs_run_by(
         lambda: out.extend(
             connected_components(ndf, edf, shuffle_partitions=4).collect()
         ),
@@ -337,7 +312,7 @@ def test_cc_fixpoint_count_fused_into_checkpoint_job(spark):
     assert {r["node"]: r["component"] for r in out} == {
         i: 0 for i in range(8)
     }
-    assert jobs <= 47, f"CC closure ran {jobs} jobs (one-join form: ~32)"
+    assert jobs <= 32, f"CC closure ran {jobs} jobs (one-join form: 32)"
 
 
 def test_cc_symmetrize_single_pass_no_union(spark):

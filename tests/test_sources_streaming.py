@@ -753,6 +753,43 @@ class TestSpoolConsumerLoop:
         assert rows[8] == ("buy", 80) and len(rows) == 9
         cat.drop_table("spool2")
 
+    def test_records_skips_consumed_segments_unopened(
+        self, tmp_path, monkeypatch
+    ):
+        """Once a read has counted a segment's records, later reads that
+        start past it skip the file without opening it; the offsets and
+        records yielded are unchanged, and a fresh instance (a restarted
+        consumer) yields the same."""
+        import builtins
+
+        from featurebase_spark.sources import spool as spool_mod
+
+        src = self._spool(tmp_path)
+        opened = []
+
+        def counting_open(path, *a, **kw):
+            opened.append(os.path.basename(path))
+            return builtins.open(path, *a, **kw)
+
+        monkeypatch.setattr(spool_mod, "open", counting_open, raising=False)
+        everything = list(src.records(from_offset=0))
+        assert [o for o, _ in everything] == list(range(10))
+        assert opened == [f"{i:08d}.ndjson" for i in range(3)]
+        opened.clear()
+        # offset 7 is the first record of segment 2: 0 and 1 stay shut
+        assert list(src.records(from_offset=7)) == everything[7:]
+        assert opened == ["00000002.ndjson"]
+        opened.clear()
+        assert list(src.records(from_offset=5)) == everything[5:]
+        assert opened == ["00000001.ndjson", "00000002.ndjson"]
+        src.append_segment([{"_id": 8, "etype": "buy", "score": 80}])
+        opened.clear()
+        tail = list(src.records(from_offset=10))
+        assert tail == [(10, {"_id": 8, "etype": "buy", "score": 80})]
+        assert opened == ["00000003.ndjson"]
+        fresh = type(src)(src.spool_dir)
+        assert list(fresh.records(from_offset=0)) == everything + tail
+
 
 # --- ExternalLookup EXECUTED against a real external SQL engine -------------
 

@@ -380,6 +380,165 @@ def test_literal_upsert_null_key_not_dropped(spark, tmp_path):
     assert rows == {1: "a", 2: "b", None: "nullrow"}
 
 
+def _null_bucket_key(n: int) -> int:
+    """A non-NULL long key that hashes into the NULL key's bucket, so a
+    literal batch holding it rewrites the bucket a NULL-key row lives in."""
+    from featurebase_spark.operators.writes import spark_bucket
+
+    return next(k for k in range(1, 10_000)
+                if spark_bucket(k, n) == spark_bucket(None, n))
+
+
+def test_literal_commit_keeps_null_key_rows(spark, tmp_path):
+    """A literal batch drops the replaced rows with ``key IS NULL OR key
+    NOT IN (...)``: a bare ``NOT IN`` is never true for a NULL key, so
+    the NULL-key row already in the table would vanish from its
+    rewritten bucket on both a literal upsert and a literal delete."""
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        _is_literal_plan,
+        literal_frame,
+        spark_bucket,
+    )
+
+    n = 16
+    k = _null_bucket_key(n)
+    t = PartitionedUpsertTable(spark, str(tmp_path / "nk"), "_id", n)
+    t.init(spark.createDataFrame(
+        [(None, "nullrow"), (k, "old"), (1, "a")], "_id bigint, v string"
+    ))
+    batch = literal_frame(spark, [(k, "new"), (2, "b")], "_id bigint, v string")
+    assert _is_literal_plan(batch)
+    assert spark_bucket(None, n) in t.upsert(batch)
+    rows = {r["_id"]: r["v"] for r in t.read().collect()}
+    assert rows == {None: "nullrow", k: "new", 1: "a", 2: "b"}
+    assert spark_bucket(None, n) in t.delete_keys(
+        literal_frame(spark, [(k,)], "_id bigint")
+    )
+    rows = {r["_id"]: r["v"] for r in t.read().collect()}
+    assert rows == {None: "nullrow", 1: "a", 2: "b"}
+
+
+def test_literal_upsert_collapses_duplicate_keys(spark, tmp_path):
+    """Duplicate keys in a literal batch still collapse to one row (the
+    ``dropDuplicates`` is skipped only when the collected keys are
+    unique)."""
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        literal_frame,
+    )
+
+    t = PartitionedUpsertTable(spark, str(tmp_path / "dup"), "_id", 16)
+    t.init(spark.createDataFrame([(5, "old"), (6, "keep")], "_id bigint, v string"))
+    t.upsert(literal_frame(
+        spark, [(5, "a"), (5, "b"), (7, "c"), (7, "c")], "_id bigint, v string"
+    ))
+    rows = [(r["_id"], r["v"]) for r in t.read().collect()]
+    assert sorted(r[0] for r in rows) == [5, 6, 7]
+    got = dict(rows)
+    assert got[5] in ("a", "b") and got[6] == "keep" and got[7] == "c"
+
+
+def test_literal_commit_string_keys_with_quotes_and_backslashes(spark, tmp_path):
+    """String keys holding ``'`` and ``\\`` reach the key predicate
+    quoted the way literal_frame quotes them: upsert replaces exactly
+    those rows and delete removes exactly them."""
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        literal_frame,
+    )
+
+    keys = ["a'b", "c\\d", "e\\'f", "plain"]
+    t = PartitionedUpsertTable(spark, str(tmp_path / "sk"), "k", 16)
+    t.init(spark.createDataFrame([(k, 0) for k in keys], "k string, v bigint"))
+    t.upsert(literal_frame(spark, [(k, 1) for k in keys[:3]], "k string, v bigint"))
+    rows = [(r["k"], r["v"]) for r in t.read().collect()]
+    assert sorted(rows) == sorted([(k, 1) for k in keys[:3]] + [("plain", 0)])
+    t.delete_keys(literal_frame(spark, [(keys[0],), (keys[2],)], "k string"))
+    assert sorted(r["k"] for r in t.read().collect()) == sorted([keys[1], "plain"])
+
+
+def test_literal_partial_column_upsert_keeps_unlisted_fields(spark, tmp_path):
+    """A literal batch with ``update_cols`` rewrites only the listed
+    columns of existing keys; new keys get NULL in the unlisted ones."""
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        literal_frame,
+    )
+
+    schema = "_id bigint, a string, b bigint"
+    t = PartitionedUpsertTable(spark, str(tmp_path / "pc"), "_id", 16)
+    t.init(spark.createDataFrame([(1, "x", 10), (2, "y", 20)], schema))
+    t.upsert(literal_frame(spark, [(1, "X", None), (3, "Z", None)], schema),
+             update_cols=["_id", "a"])
+    rows = {r["_id"]: (r["a"], r["b"]) for r in t.read().collect()}
+    assert rows == {1: ("X", 10), 2: ("y", 20), 3: ("Z", None)}
+
+
+def test_literal_and_distributed_batches_leave_identical_tables(spark, tmp_path):
+    """The literal commit (key predicate, no dedupe) and the distributed
+    one (broadcast anti join after ``dropDuplicates``) are the same
+    upsert and delete: identical rows, identical bucket sets."""
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        _is_literal_plan,
+        literal_frame,
+    )
+
+    schema = "_id bigint, v string"
+    k = _null_bucket_key(16)
+    base = [(i, f"v{i}") for i in range(0, 300, 3)] + [(None, "n")]
+    batch = [(i, f"w{i}") for i in range(0, 400, 7)] + [(k, "nb")]
+    dead = [(i,) for i in range(0, 120, 9)]
+    out = []
+    for name, make in (
+        ("lit", lambda rows, sch: literal_frame(spark, rows, sch)),
+        ("dist", lambda rows, sch: spark.createDataFrame(rows, sch)),
+    ):
+        t = PartitionedUpsertTable(spark, str(tmp_path / name), "_id", 16)
+        t.init(spark.createDataFrame(base, schema))
+        b = make(batch, schema)
+        assert _is_literal_plan(b) == (name == "lit")
+        touched = t.upsert(b)
+        touched_del = t.delete_keys(make(dead, "_id bigint"))
+        rows = sorted(((r["_id"] is None, r["_id"] or 0), r["v"])
+                      for r in t.read().collect())
+        out.append((touched, touched_del, sorted(t._load_manifest()["buckets"]), rows))
+    assert out[0] == out[1]
+
+
+def test_literal_upsert_two_jobs_one_file_per_bucket(spark, tmp_path, jobs_run_by):
+    """A 200-row literal upsert into a 16-bucket table commits in at most
+    two Spark jobs (the staging shuffle's map stage and the write),
+    writes ONE file per touched bucket, and runs at most
+    ``defaultParallelism`` write tasks (part files are numbered by the
+    task that wrote them)."""
+    import glob
+    import os
+
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        literal_frame,
+    )
+
+    t = PartitionedUpsertTable(spark, str(tmp_path / "w"), "_id", 16)
+    t.init(spark.range(1000).selectExpr("id AS _id", "CAST(id AS string) AS v"))
+    batch = literal_frame(
+        spark, [(i * 7, f"n{i}") for i in range(200)], "_id bigint, v string"
+    )
+    touched = []
+    jobs = jobs_run_by(lambda: touched.extend(t.upsert(batch)))
+    assert jobs <= 2, jobs
+    assert len(touched) == 16
+    parts = []
+    for b in touched:
+        files = glob.glob(os.path.join(t.bucket_dir(b), "*.parquet"))
+        assert len(files) == 1, (b, files)
+        parts.append(os.path.basename(files[0]).split("-")[1])
+    assert len(set(parts)) <= spark.sparkContext.defaultParallelism, parts
+    assert t.read().count() == 1000 + sum(1 for i in range(200) if i * 7 >= 1000)
+
+
 def test_literal_frame_roundtrips_hostile_payloads(spark):
     """r7 ADVICE high #1: Spark's parser honors backslash escapes in
     string literals, so un-doubled backslashes silently corrupt spool
