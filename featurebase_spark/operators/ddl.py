@@ -42,10 +42,11 @@ class Catalog:
     (:class:`~featurebase_spark.operators.writes.PartitionedUpsertTable`)
     and every later INSERT/DELETE rewrites ONLY the buckets its keys hash
     into — per-statement cost O(touched buckets), not O(table), the
-    reference's per-shard fragment merge on import (batch/batch.go),
-    written by at most ``defaultParallelism`` tasks (one file per
-    touched bucket either way). A literal batch (the statement door,
-    ``consume_spool``) commits in two Spark jobs.
+    reference's per-shard fragment merge on import (batch/batch.go). The
+    rewritten buckets go into one new generation, in as few files as
+    their size needs (one for a small batch). A literal batch (the
+    statement door, ``consume_spool``) commits in two Spark jobs and is
+    collected once, for the commit and every indexed field.
     Pass ``bucketed=False`` to keep the r1 whole-generation-swap commit
     (fine for tiny in-session tables).
     """
@@ -199,9 +200,22 @@ class Catalog:
         their old values (opinsert.go imports only targetColumns).
 
         Bucketed (default): commit cost is O(buckets the batch's keys
-        hash into); a 3-row INSERT into a huge table rewrites ≤3 bucket
-        dirs, never the table."""
+        hash into); a 3-row INSERT into a huge table rewrites ≤3 buckets
+        into one new generation file, never the table.
+
+        A literal batch (a LocalRelation: the statement door,
+        ``consume_spool``) is collected ONCE here, on the driver, and its
+        rows go to the storage commit's bucket routing and to every
+        indexed field's in-process merge."""
+        from featurebase_spark.operators.writes import _is_literal_plan
+
         self._check_foreign_keys(name, rows)
+        collected = None
+        consumers = name in self._index_fields or (
+            self.bucketed and name in self._storage
+        )
+        if consumers and _is_literal_plan(rows):
+            collected = rows.collect()
         if self.bucketed:
             store = self._storage.get(name)
             if store is None:
@@ -213,9 +227,7 @@ class Catalog:
 
                 from featurebase_spark.operators.writes import (
                     PartitionedUpsertTable,
-                    _is_literal_plan,
                     merge_upsert,
-                    spark_bucket,
                 )
 
                 view = self.spark.table(self._view(name))
@@ -226,24 +238,12 @@ class Catalog:
                     "_id",
                     self.buckets,
                 )
-                # first statement into a fresh table: when both sides are
-                # literal plans the touched buckets are known driver-side
-                # for free — size the init shuffle to them instead of the
-                # full bucket count (a 30-row first INSERT stages ~20
-                # partitions, not 32+)
-                hint = None
-                if _is_literal_plan(rows) and _is_literal_plan(view):
-                    ks = {r[0] for r in view.select("_id").collect()}
-                    ks |= {r[0] for r in rows.select("_id").collect()}
-                    hint = len(
-                        {spark_bucket(k, self.buckets) for k in ks}
-                    ) or None
-                store.init(merged, n_buckets_hint=hint)
+                store.init(merged)
                 self._storage[name] = store
             else:
-                store.upsert(rows, update_cols=cols)
+                store.upsert(rows, update_cols=cols, rows=collected)
             self._register(name)
-            self._index_upsert(name, rows, cols)
+            self._index_upsert(name, rows, cols, collected)
             return
         from featurebase_spark.operators.writes import materialize_view, merge_upsert
 
@@ -252,7 +252,7 @@ class Catalog:
         )
         # distributed parquet commit — no rows ever pass through the driver
         materialize_view(merged, name, self._data_path)
-        self._index_upsert(name, rows, cols)
+        self._index_upsert(name, rows, cols, collected)
 
     def _check_foreign_keys(self, name: str, rows: DataFrame) -> None:
         """Write-time foreign-index enforcement (field.go:133-141, checked
@@ -287,11 +287,17 @@ class Catalog:
 
     def delete_ids(self, name: str, ids: DataFrame) -> None:
         """DELETE by key set — bucketed: rewrites only the buckets the
-        deleted keys live in (per-shard delete, executor.go:9050-9320)."""
-        self._index_delete(name, ids)
+        deleted keys live in (per-shard delete, executor.go:9050-9320).
+        A literal key set is collected once, as in :meth:`insert`."""
+        from featurebase_spark.operators.writes import _is_literal_plan
+
+        collected = None
+        if (self.bucketed or name in self._index_fields) and _is_literal_plan(ids):
+            collected = ids.collect()
+        self._index_delete(name, ids, collected)
         if self.bucketed:
             store = self._ensure_storage(name)
-            store.delete_keys(ids)
+            store.delete_keys(ids, rows=collected)
             self._register(name)
             return
         from featurebase_spark.operators.writes import delete_records
@@ -544,12 +550,18 @@ class Catalog:
         """The table's BitmapCatalog, or None if nothing is indexed."""
         return self._bitmap.get(table)
 
-    def _index_upsert(self, table: str, rows: DataFrame, cols) -> None:
+    def _index_upsert(
+        self, table: str, rows: DataFrame, cols, collected: list | None = None
+    ) -> None:
         """Post-write index maintenance: clear-then-set the batch into
         every indexed field the statement wrote (unlisted columns of a
         partial INSERT keep their values, so their indexes are untouched).
         A BSI delta outside the encoding range rebuilds that field from
-        the committed table (reference bitDepth widening)."""
+        the committed table (reference bitDepth widening). ``collected``:
+        the batch's rows, already collected by :meth:`insert`; every
+        driver-local field merges from them instead of collecting again
+        (string-keyed tables take the translator's ids, so they still
+        collect per field)."""
         from featurebase_spark.plans.bitmap_index import BsiRangeError
 
         self._text_mark_stale(table, cols)
@@ -561,6 +573,7 @@ class Catalog:
         if table in self._translators:
             rows = self._translators[table].attach(rows, "_id")
             id_col = "__fbid"
+            collected = None
         written = None if cols is None else set(cols)
         hint = self._small_storage(table)
         for f, kind in reg.items():
@@ -568,15 +581,19 @@ class Catalog:
                 continue
             try:
                 if kind == "bsi":
-                    cat.upsert_bsi_field(rows, f, id_col=id_col, cache=False)
+                    cat.upsert_bsi_field(rows, f, id_col=id_col, cache=False,
+                                         collected=collected)
                 else:
-                    cat.upsert_field(rows, f, id_col=id_col, cache=False)
+                    cat.upsert_field(rows, f, id_col=id_col, cache=False,
+                                     collected=collected)
             except BsiRangeError:
                 df, rid = self._indexed_frame(table)
                 cat.index_bsi_field(df, f, id_col=rid, cache=False)
             self._pin_field(cat, f, kind, small_hint=hint)
 
-    def _index_delete(self, table: str, ids: DataFrame) -> None:
+    def _index_delete(
+        self, table: str, ids: DataFrame, collected: list | None = None
+    ) -> None:
         self._text_mark_stale(table, None)
         reg = self._index_fields.get(table)
         if not reg:
@@ -591,9 +608,11 @@ class Catalog:
                 .select(F.col("id").alias("__fbid"))
             )
             id_col = "__fbid"
+            collected = None
         hint = self._small_storage(table)
         for f, kind in reg.items():
-            cat.delete_field_ids(ids, f, id_col=id_col, cache=False)
+            cat.delete_field_ids(ids, f, id_col=id_col, cache=False,
+                                 collected=collected)
             self._pin_field(cat, f, kind, small_hint=hint)
 
     @staticmethod

@@ -56,7 +56,8 @@ class KeyTranslator:
         right for session-scoped tables. The 100-TB path stores the map
         as a bucketed parquet table (PartitionedUpsertTable keyed on
         ``key``) so a batch rewrites only the buckets its new keys hash
-        into — the boltdb-per-partition persistence of the reference's
+        into, packed into one new generation file for a small batch —
+        the boltdb-per-partition persistence of the reference's
         translate store; the allocation arithmetic here is unchanged."""
         ks = (
             keys.select(F.col(key_col).cast("string").alias("key"))

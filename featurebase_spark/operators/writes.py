@@ -230,23 +230,40 @@ class PartitionedUpsertTable:
     Layout (crash-atomic, manifest-pointer commit — the file-system form
     of RBF's per-shard ACID commit, rbf/rbf.go + tx.go)::
 
-        path/MANIFEST.json            <- THE commit point (atomic replace)
-        path/g_<gen>/__bucket=N/*.parquet
+        path/MANIFEST.json              <- THE commit point (atomic replace)
+        path/g_<gen>/part-*.parquet     <- rows of the buckets written in
+                                           <gen>, ``__bucket`` a column
 
-    The manifest maps each live bucket id to the generation directory
-    holding its current data. Every write stages a NEW generation dir
-    (never touching live files), then atomically replaces the ONE
-    manifest file; readers resolve bucket→dir through the manifest, so a
-    crash at ANY point before the replace leaves them on the old, fully
-    consistent generation set — there is no window of mixed-generation
-    buckets. Unreferenced dirs are vacuumed best-effort after commit
-    (Delta's retention-window analogue; single-writer assumed, as with
-    any file-system table format without a lock service).
+    Buckets are the unit of routing and of the commit contract; files
+    are not. A commit writes the buckets it touches into the fewest
+    files their size needs (AQE coalesces the staging shuffle, so a
+    small commit writes one file, the way a reference import of a
+    one-shard table writes one fragment). The manifest maps each bucket
+    to the generation holding its current rows and records how many
+    buckets each generation was written with. Every write stages a NEW
+    generation dir (never touching live files), then atomically replaces
+    the ONE manifest file; a crash at ANY point before the replace
+    leaves readers on the old, fully consistent generation set. A
+    generation no bucket points at any more is vacuumed best-effort after
+    commit (Delta's retention-window analogue; single-writer assumed, as
+    with any file-system table format without a lock service).
+
+    A live generation can still hold rows of buckets later commits
+    replaced; readers filter them out by ``__bucket``. Space stays
+    bounded: a commit that would leave a generation with fewer than half
+    the buckets it was written with folds that generation's remaining
+    buckets into itself (rewritten unchanged), so stored rows stay within
+    about twice the live ones, and over any run of commits the buckets
+    rewritten stay within twice the buckets touched (a fold moves fewer
+    buckets than the commits that emptied its generation touched).
 
     Bucket pruning happens at the MANIFEST level: a touched-bucket read
-    lists only those buckets' directories, so untouched buckets cost
-    zero I/O — not even a footer read. With Delta this whole class is
-    ``MERGE`` + Z-order; the seam is :meth:`upsert`.
+    opens only the generations those buckets point at, filtered to them
+    (row-group statistics on the ``__bucket``-sorted files skip the
+    rest). Generation directories in the earlier ``__bucket=N`` layout
+    read through the same path (Spark discovers the partition column).
+    With Delta this whole class is ``MERGE`` + Z-order; the seam is
+    :meth:`upsert`.
     """
 
     MANIFEST = "MANIFEST.json"
@@ -257,10 +274,10 @@ class PartitionedUpsertTable:
         self.key = key
         self.buckets = buckets
         self.schema = None  # pinned on init()/load(); empty tables read back
-        #: (manifest version, frame) — whole-table reads reuse the frame
-        #: until the next commit bumps the version (each spark.read.parquet
-        #: costs a driver-side file listing; repeated reads shouldn't)
-        self._read_cache: tuple[int, DataFrame] | None = None
+        #: generation -> its unfiltered frame: a generation's files never
+        #: change, so the file listing spark.read.parquet paid for is
+        #: reused by every later read until the generation is vacuumed
+        self._frames: dict[str, DataFrame] = {}
 
     # -- manifest (the generation pointer)
 
@@ -287,10 +304,19 @@ class PartitionedUpsertTable:
         return self
 
     def _load_manifest(self) -> dict:
+        """The committed manifest. A generation the manifest has no
+        written-bucket count for (tables committed before the count was
+        recorded, one ``__bucket=N`` directory per bucket, stale ones
+        vacuumed) counts the buckets pointing at it."""
         import json
+        from collections import Counter
 
         with open(self._manifest_path()) as f:
-            return json.load(f)
+            man = json.load(f)
+        gens = man.setdefault("gens", {})
+        for g, n in Counter(man["buckets"].values()).items():
+            gens.setdefault(g, n)
+        return man
 
     def _swap_manifest(self, man: dict) -> None:
         """Atomically publish a new manifest: write-aside + fsync +
@@ -304,43 +330,31 @@ class PartitionedUpsertTable:
             os.fsync(f.fileno())
         os.replace(tmp, self._manifest_path())
 
-    @staticmethod
-    def _staged_buckets(gen_path: str) -> list[int]:
-        if not os.path.isdir(gen_path):
-            return []
-        return sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(gen_path)
-            if d.startswith("__bucket=")
-        )
+    def bucket_files(self, b: int) -> list[str]:
+        """Data files of the generation bucket ``b`` points at (empty if
+        no generation holds it). They also hold other buckets' rows; a
+        commit that does not rewrite ``b`` leaves them byte-identical."""
+        import glob
 
-    def bucket_dir(self, b: int) -> str | None:
-        """Current directory of bucket ``b`` (None if empty) — lets tests
-        assert untouched buckets' files are byte-identical across commits."""
         gen = self._load_manifest()["buckets"].get(str(b))
-        return None if gen is None else os.path.join(self.path, gen, f"__bucket={b}")
+        if gen is None:
+            return []
+        return sorted(glob.glob(os.path.join(self.path, gen, "**", "*.parquet"),
+                                recursive=True))
 
     def _vacuum(self, man: dict) -> None:
-        """Best-effort removal of bucket dirs no longer referenced by the
-        committed manifest (and generation dirs emptied by it). Failure is
-        harmless — orphans are re-collected on the next commit."""
+        """Best-effort removal of generation dirs no bucket of the
+        committed manifest points at. Failure is harmless — orphans are
+        re-collected on the next commit."""
         import shutil
 
-        live = {(g, int(b)) for b, g in man["buckets"].items()}
-        live_gens = {g for _, g in man["buckets"].items()}
+        live = set(man["buckets"].values())
         for entry in os.listdir(self.path):
             p = os.path.join(self.path, entry)
-            if not entry.startswith("g_") or not os.path.isdir(p):
-                continue
-            if entry not in live_gens:
+            if entry.startswith("g_") and entry not in live and os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
-                continue
-            for sub in os.listdir(p):
-                if sub.startswith("__bucket=") and (
-                    entry,
-                    int(sub.split("=", 1)[1]),
-                ) not in live:
-                    shutil.rmtree(os.path.join(p, sub), ignore_errors=True)
+        for g in [g for g in self._frames if g not in live]:
+            del self._frames[g]
 
     # -- data plane
 
@@ -349,25 +363,33 @@ class PartitionedUpsertTable:
             "__bucket", F.pmod(F.xxhash64(F.col(self.key)), F.lit(self.buckets))
         )
 
-    def _touched(self, batch: DataFrame) -> tuple[list[int], list | None]:
+    def _touched(
+        self, batch: DataFrame, rows: list | None = None
+    ) -> tuple[list[int], list | None]:
         """Bucket ids a batch's keys hash into, and the batch's keys when
         they were collected. A LITERAL batch (the statement-door and
         ``consume_spool`` shape: a LocalRelation, whose collect needs no
-        executors) with a long/string key collects its keys ONCE and
-        routes on the DRIVER via the bit-exact :func:`spark_bucket`
-        replica — the reference coordinator's ``shard = id / ShardWidth``
-        arithmetic, saving the distinct+exchange job a plan-side
-        computation costs; :meth:`upsert` and :meth:`delete_keys` reuse
-        the key list to filter the replaced rows without a join.
-        Distributed batches keep the aggregation and return ``None`` for
-        the keys (keys may be billions; never collected)."""
+        executors) with a long/string key collects its keys ONCE — or
+        takes them from ``rows``, the batch already collected by the
+        caller — and routes on the DRIVER via the bit-exact
+        :func:`spark_bucket` replica — the reference coordinator's
+        ``shard = id / ShardWidth`` arithmetic, saving the
+        distinct+exchange job a plan-side computation costs;
+        :meth:`upsert` and :meth:`delete_keys` reuse the key list to
+        filter the replaced rows without a join. Distributed batches keep
+        the aggregation and return ``None`` for the keys (keys may be
+        billions; never collected)."""
         dtype = dict(batch.dtypes).get(self.key)
-        if dtype in ("bigint", "string") and _is_literal_plan(batch):
+        if dtype in ("bigint", "string") and (
+            rows is not None or _is_literal_plan(batch)
+        ):
+            if rows is None:
+                rows = batch.select(self.key).collect()
             # NULL keys included: _bucketed stages them into bucket
             # pmod(xxhash64(NULL)=seed 42, n), so the driver-computed set
             # must cover that bucket too or the staged rows would never
             # be repointed by the manifest commit (silent row drop).
-            keys = [r[0] for r in batch.select(self.key).collect()]
+            keys = [r[self.key] for r in rows]
             touched = sorted({spark_bucket(k, self.buckets) for k in set(keys)})
             return touched, keys
         b = self._bucketed(batch.dropDuplicates([self.key]))
@@ -395,73 +417,74 @@ class PartitionedUpsertTable:
         k = f"`{self.key}`"
         return current.where(F.expr(f"{k} IS NULL OR {k} NOT IN ({', '.join(lits)})"))
 
-    def _write_generation(
-        self, bucketed: DataFrame, n_buckets_hint: int | None = None
-    ) -> tuple[str, list[int]]:
-        """Stage a generation dir; returns (gen name, bucket ids present).
-        Rows hash-place on ``__bucket`` through a shuffle of
-        ``min(touched, buckets, defaultParallelism)`` partitions: hash
-        partitioning puts each bucket in exactly ONE task, so every
-        bucket still gets one compact file, while the task count follows
-        the cores — a 34-bucket commit on 4 cores runs 4 write tasks,
-        not 16 or 34 (tasks beyond the cores only queue, each paying the
-        per-task fixed cost; on a cluster whose cores cover the bucket
-        count nothing changes). Point writes use the same shape: an
-        earlier revision narrow-``coalesce``d ≤4-bucket commits to skip
-        the stage boundary, but measured on literal-batch parents the
-        coalesced single-task write costs 4-7x the tiny shuffle (~4.5s vs
-        ~0.6s for a 55-row staged batch — the merged write plan loses its
-        local-relation fast path), so the exchange wins at every n."""
+    def _write_generation(self, bucketed: DataFrame) -> str:
+        """Stage ``bucketed`` as a new generation dir; returns its name.
+        Rows hash-place on ``__bucket`` through a shuffle of the session's
+        shuffle-partition count, which AQE coalesces to the data's size:
+        a small commit writes ONE file, a large one at most
+        min(touched buckets, shuffle partitions), and hash partitioning
+        still puts each bucket in exactly one file. Each file is sorted
+        by ``__bucket``, so at scale row-group statistics let a reader's
+        ``__bucket`` filter skip other buckets' rows. (One file per
+        bucket cost a file, a checksum and a task per touched bucket:
+        16 files per 200-row commit whatever the table's size.)"""
         gen = "g_" + uuid.uuid4().hex[:12]
-        n = max(1, min(n_buckets_hint or self.buckets, self.buckets,
-                       self.spark.sparkContext.defaultParallelism))
-        staged = bucketed.repartition(n, "__bucket")
-        staged.write.mode("overwrite").partitionBy("__bucket").parquet(
-            os.path.join(self.path, gen)
+        (
+            bucketed.repartition("__bucket")
+            .sortWithinPartitions("__bucket")
+            .write.mode("overwrite")
+            .parquet(os.path.join(self.path, gen))
         )
-        return gen, self._staged_buckets(os.path.join(self.path, gen))
+        return gen
 
-    def init(self, df: DataFrame, n_buckets_hint: int | None = None) -> None:
-        """Initial (full) load. Works for EMPTY frames too — the schema is
-        pinned (in memory and in the manifest) so later reads/upserts do
-        not depend on file inference. Repartitioning on the bucket gives
-        each bucket dir one compact file per shuffle partition instead of
-        a per-task file spray (AQE coalesces the shuffle for small
-        loads). ``n_buckets_hint`` sizes the staging shuffle when the
-        caller knows the load touches few buckets (the first-statement
-        point-write shape)."""
+    def init(self, df: DataFrame) -> None:
+        """Initial (full) load: one generation every bucket points at.
+        Works for EMPTY frames too — the schema is pinned (in memory and
+        in the manifest) so later reads/upserts do not depend on file
+        inference. The write is :meth:`_write_generation`'s, sized by
+        AQE to the load."""
         bucketed = self._bucketed(df)
         self.schema = bucketed.schema
         os.makedirs(self.path, exist_ok=True)
-        if _is_literal_plan(df) and not df.take(1):
-            # empty CREATE TABLE init: the manifest alone pins the
-            # schema — skip the 0-row generation write job entirely
-            # (a full bucket-count shuffle + partitioned commit costs
-            # ~0.5s per statement for nothing)
-            man = {
-                "version": 1,
-                "key": self.key,
-                "n_buckets": self.buckets,
-                "schema": self.schema.json(),
-                "buckets": {},
-            }
-            self._swap_manifest(man)
-            return
-        gen, staged = self._write_generation(bucketed, n_buckets_hint)
         man = {
             "version": 1,
             "key": self.key,
             "n_buckets": self.buckets,
             "schema": self.schema.json(),
-            "buckets": {str(b): gen for b in staged},
+            "buckets": {},
+            "gens": {},
         }
+        if _is_literal_plan(df) and not df.take(1):
+            # empty CREATE TABLE init: the manifest alone pins the
+            # schema — skip the 0-row generation write job entirely
+            # (a shuffle + commit costs ~0.5s per statement for nothing)
+            self._swap_manifest(man)
+            return
+        gen = self._write_generation(bucketed)
+        man["buckets"] = {str(b): gen for b in range(self.buckets)}
+        man["gens"] = {gen: self.buckets}
         self._swap_manifest(man)
         self._vacuum(man)
 
+    def _gen_frame(self, gen: str, sel: list[int], written: int) -> DataFrame:
+        """One generation's rows of the buckets ``sel``: the whole dir,
+        filtered by ``__bucket`` only when the generation holds buckets
+        outside ``sel``."""
+        out = self._frames.get(gen)
+        if out is None:
+            out = self.spark.read.schema(self.schema).parquet(
+                os.path.join(self.path, gen)
+            )
+            self._frames[gen] = out
+        if len(sel) < written:
+            out = out.where(F.expr(f"__bucket IN ({', '.join(map(str, sel))})"))
+        return out
+
     def _read_raw(self, buckets: Sequence[int] | None = None) -> DataFrame:
         """Read the committed table (optionally only the given buckets)
-        by resolving bucket→generation-dir through the manifest. Pruning
-        is path-level: unlisted buckets are never even footer-read."""
+        by resolving bucket→generation through the manifest: one read
+        per live generation, generations holding none of the buckets
+        never opened."""
         import json
 
         from pyspark.sql.types import StructType
@@ -469,25 +492,15 @@ class PartitionedUpsertTable:
         man = self._load_manifest()
         if self.schema is None:
             self.schema = StructType.fromJson(json.loads(man["schema"]))
-        version = int(man.get("version", 0))
-        if buckets is None and self._read_cache and self._read_cache[0] == version:
-            return self._read_cache[1]
-        entries = man["buckets"]
-        if buckets is not None:
-            want = {int(b) for b in buckets}
-            entries = {b: g for b, g in entries.items() if int(b) in want}
+        want = None if buckets is None else {int(b) for b in buckets}
         by_gen: dict[str, list[int]] = {}
-        for b, g in entries.items():
-            by_gen.setdefault(g, []).append(int(b))
-        frames = []
-        for g in sorted(by_gen):
-            base = os.path.join(self.path, g)
-            paths = [os.path.join(base, f"__bucket={b}") for b in sorted(by_gen[g])]
-            frames.append(
-                self.spark.read.schema(self.schema)
-                .option("basePath", base)
-                .parquet(*paths)
-            )
+        for b, g in man["buckets"].items():
+            if want is None or int(b) in want:
+                by_gen.setdefault(g, []).append(int(b))
+        frames = [
+            self._gen_frame(g, sorted(by_gen[g]), man["gens"][g])
+            for g in sorted(by_gen)
+        ]
         if not frames:
             # LocalRelation, not createDataFrame([], schema) — the latter
             # schedules a defaultParallelism-task empty RDD scan per read
@@ -495,27 +508,44 @@ class PartitionedUpsertTable:
                 f"CAST(NULL AS {f.dataType.simpleString()}) AS `{f.name}`"
                 for f in self.schema.fields
             )
-            out = self.spark.sql(f"SELECT {cols} WHERE 1=0")
-        else:
-            out = frames[0]
-            for f in frames[1:]:
-                out = out.unionByName(f)
-        if buckets is None:
-            self._read_cache = (version, out)
+            return self.spark.sql(f"SELECT {cols} WHERE 1=0")
+        out = frames[0]
+        for f in frames[1:]:
+            out = out.unionByName(f)
         return out
 
     def read(self) -> DataFrame:
         return self._read_raw().drop("__bucket")
 
+    def _rewritten(self, touched: list[int]) -> list[int]:
+        """The buckets a commit touching ``touched`` rewrites: those,
+        plus the remaining buckets of every generation the commit would
+        leave with fewer than half the buckets it was written with
+        (folded in unchanged, so that generation can be vacuumed)."""
+        man = self._load_manifest()
+        rest: dict[str, list[int]] = {}
+        t = set(touched)
+        for b, g in man["buckets"].items():
+            if int(b) not in t:
+                rest.setdefault(g, []).append(int(b))
+        for g, bs in rest.items():
+            if 2 * len(bs) < man["gens"][g]:
+                t.update(bs)
+        return sorted(t)
+
     def upsert(
-        self, updates: DataFrame, update_cols: Sequence[str] | None = None
+        self,
+        updates: DataFrame,
+        update_cols: Sequence[str] | None = None,
+        rows: list | None = None,
     ) -> list[int]:
         """Upsert-by-key a batch; returns the bucket ids rewritten.
         Duplicate keys within the batch collapse last-write-wins by
         ``dropDuplicates`` order (pass pre-deduped batches for a
         deterministic winner, as bulk_upsert_last_write_wins does).
         ``update_cols`` as in :func:`merge_upsert` (partial-column INSERT
-        keeps unlisted fields of existing rows).
+        keeps unlisted fields of existing rows). ``rows``: the batch's
+        rows when the caller already collected them (a literal batch).
 
         A literal batch (see :meth:`_touched`) skips ``dropDuplicates``
         when its collected keys are already unique and drops the replaced
@@ -523,16 +553,17 @@ class PartitionedUpsertTable:
         is two Spark jobs: the staging shuffle's map stage and the write.
         A distributed batch dedupes and takes a broadcast anti join.
 
-        Commit is copy-on-write + manifest swap: the merged touched
-        buckets stage into a fresh generation dir (the job reads the old
-        files while writing — no in-place overwrite race), then ONE
-        atomic manifest replace points the touched buckets at the new
-        generation. A crash anywhere before the replace leaves readers on
-        the old, fully consistent state."""
-        touched, keys = self._touched(updates)
+        Commit is copy-on-write + manifest swap: the merged buckets
+        (touched, plus any folded in by :meth:`_rewritten`) stage into a
+        fresh generation dir — the job reads the old files while writing,
+        no in-place overwrite race — then ONE atomic manifest replace
+        points them at the new generation. A crash anywhere before the
+        replace leaves readers on the old, fully consistent state."""
+        touched, keys = self._touched(updates, rows)
         if keys is None or len(set(keys)) < len(keys):
             updates = updates.dropDuplicates([self.key])
-        current = self._read_raw(touched)  # manifest-level pruned read
+        rewrite = self._rewritten(touched)
+        current = self._read_raw(rewrite)  # manifest-level pruned read
         if update_cols is not None:
             merged_up = merge_upsert(current.drop("__bucket"), updates,
                                      self.key, update_cols)
@@ -541,37 +572,40 @@ class PartitionedUpsertTable:
         else:
             kept = self._without_keys(current, updates, keys)
             merged = kept.unionByName(self._bucketed(updates))
-        return self._commit_touched(merged, touched)
+        return self._commit(merged, rewrite)
 
-    def delete_keys(self, keys: DataFrame) -> list[int]:
+    def delete_keys(self, keys: DataFrame, rows: list | None = None) -> list[int]:
         """Delete whole records by key — reads and rewrites ONLY the
         buckets the deleted keys hash into (the per-shard delete of
-        executeDeleteRecords, executor.go:9050-9320). A bucket whose
-        rows all die simply drops out of the manifest. The deleted keys'
-        rows are dropped as in :meth:`upsert` (:meth:`_without_keys`)."""
-        touched, collected = self._touched(keys)
+        executeDeleteRecords, executor.go:9050-9320), plus any folded in
+        by :meth:`_rewritten`. The deleted keys' rows are dropped as in
+        :meth:`upsert` (:meth:`_without_keys`); ``rows`` as there."""
+        touched, collected = self._touched(keys, rows)
         if collected is None:
             keys = keys.select(self.key).dropDuplicates([self.key])
-        kept = self._without_keys(self._read_raw(touched), keys, collected)
-        return self._commit_touched(kept, touched)
+        rewrite = self._rewritten(touched)
+        kept = self._without_keys(self._read_raw(rewrite), keys, collected)
+        return self._commit(kept, rewrite)
 
-    def _commit_touched(self, merged: DataFrame, touched: list[int]) -> list[int]:
-        """Stage the merged touched buckets as a new generation, then
-        commit by atomic manifest replace (see :meth:`upsert`). A touched
-        bucket absent from the staged output (all its rows died) is
-        dropped from the manifest."""
-        gen, staged = self._write_generation(merged, n_buckets_hint=len(touched))
-        staged_set = set(staged)
+    def _commit(self, merged: DataFrame, rewrite: list[int]) -> list[int]:
+        """Stage the merged buckets ``rewrite`` as a new generation, then
+        commit by atomic manifest replace (see :meth:`upsert`). EVERY
+        bucket in ``rewrite`` points at the new generation, literal and
+        distributed batches alike: a bucket whose rows all died points at
+        a generation holding none of its rows, so it reads as empty."""
+        if not rewrite:
+            return []
+        gen = self._write_generation(merged)
         man = self._load_manifest()
-        for b in touched:
-            if b in staged_set:
-                man["buckets"][str(b)] = gen
-            else:
-                man["buckets"].pop(str(b), None)
+        for b in rewrite:
+            man["buckets"][str(b)] = gen
+        live = set(man["buckets"].values())
+        man["gens"] = {g: n for g, n in man["gens"].items() if g in live}
+        man["gens"][gen] = len(rewrite)
         man["version"] = int(man.get("version", 0)) + 1
         self._swap_manifest(man)  # the single atomic commit point
         self._vacuum(man)
-        return sorted(touched)
+        return rewrite
 
 
 def vacuum_generations(base_path: str, name: str, keep: str) -> None:

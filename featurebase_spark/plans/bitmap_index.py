@@ -1388,12 +1388,16 @@ class BitmapCatalog:
 
         return card(col)
 
-    def _delta_rows(self, delta: DataFrame, field: str, id_col: str):
-        """Collect a small delta for the in-process merge; None when it
-        exceeds SMALL_DELTA_ROWS (caller takes the distributed path)."""
-        rows = delta.select(id_col, field).limit(
-            self.SMALL_DELTA_ROWS + 1
-        ).collect()
+    def _delta_rows(
+        self, delta: DataFrame, cols: list[str], collected: list | None = None
+    ):
+        """A small delta's rows for the in-process merge — ``collected``
+        when the caller already collected the batch, else collected here
+        — or None when it exceeds SMALL_DELTA_ROWS (caller takes the
+        distributed path)."""
+        rows = collected
+        if rows is None:
+            rows = delta.select(*cols).limit(self.SMALL_DELTA_ROWS + 1).collect()
         if len(rows) > self.SMALL_DELTA_ROWS:
             return None
         return rows
@@ -1498,7 +1502,8 @@ class BitmapCatalog:
         return self._local_finish(field, d, True, _active_spark())
 
     def upsert_field(
-        self, delta: DataFrame, field: str, id_col: str = "_id", cache: bool = True
+        self, delta: DataFrame, field: str, id_col: str = "_id", cache: bool = True,
+        collected: list | None = None,
     ) -> DataFrame:
         """Full upsert of an EQUALITY index: every delta id's old bits are
         cleared from its shard's fragments, then the delta's new (value,
@@ -1509,9 +1514,10 @@ class BitmapCatalog:
 
         Driver-local fields (small indexes) merge IN PROCESS — pure
         numpy, no Spark job — exactly the reference's fragment merge
-        under the shard write Tx."""
+        under the shard write Tx; ``collected`` is the delta's rows when
+        the caller already collected them."""
         if field in self._eq_local:
-            rows = self._delta_rows(delta, field, id_col)
+            rows = self._delta_rows(delta, [id_col, field], collected)
             if rows is not None:
                 return self._local_upsert_eq(field, rows, id_col, field)
             self._spill_local(field)
@@ -1560,16 +1566,18 @@ class BitmapCatalog:
         return merged
 
     def upsert_bsi_field(
-        self, delta: DataFrame, field: str, id_col: str = "_id", cache: bool = True
+        self, delta: DataFrame, field: str, id_col: str = "_id", cache: bool = True,
+        collected: list | None = None,
     ) -> DataFrame:
         """Full upsert of a BSI index: clear delta ids from every plane of
         their shards, then OR in the delta's planes built against the
         EXISTING (min, nbits) encoding. Raises ``BsiRangeError`` when a
         delta value falls outside the encodable range — the caller
         rebuilds with a wider encoding (the reference widens bitDepth on
-        import, field.go:856+). Driver-local fields merge in process."""
+        import, field.go:856+). Driver-local fields merge in process
+        (``collected`` as in :meth:`upsert_field`)."""
         if field in self._bsi_local:
-            local_rows = self._delta_rows(delta, field, id_col)
+            local_rows = self._delta_rows(delta, [id_col, field], collected)
             if local_rows is not None:
                 return self._local_upsert_bsi(field, local_rows, id_col, field)
             self._spill_local(field)
@@ -1653,17 +1661,16 @@ class BitmapCatalog:
         return merged
 
     def delete_field_ids(
-        self, ids: DataFrame, field: str, id_col: str = "_id", cache: bool = True
+        self, ids: DataFrame, field: str, id_col: str = "_id", cache: bool = True,
+        collected: list | None = None,
     ) -> DataFrame:
         """Clear the given record ids from a field's index (equality or
         BSI) — the DELETE side of the shard write Tx. Only fragments in
         the ids' shards are rewritten. Driver-local fields clear in
-        process."""
+        process (``collected`` as in :meth:`upsert_field`)."""
         if self.is_local(field):
-            id_rows = ids.select(id_col).limit(
-                self.SMALL_DELTA_ROWS + 1
-            ).collect()
-            if len(id_rows) <= self.SMALL_DELTA_ROWS:
+            id_rows = self._delta_rows(ids, [id_col], collected)
+            if id_rows is not None:
                 local_bsi = field in self._bsi_local
                 d = (self._bsi_local if local_bsi else self._eq_local)[field]
                 self._local_clear(d, [r[id_col] for r in id_rows])

@@ -148,8 +148,9 @@ def upsert_sink(
 
     Each micro-batch commits through a
     :class:`~featurebase_spark.operators.writes.PartitionedUpsertTable`
-    (the DEFAULT since r3): only the hash-bucket partitions the batch's
-    keys touch are rewritten — per-batch cost O(touched buckets), the
+    (the DEFAULT since r3): only the hash buckets the batch's keys touch
+    are rewritten, into one new generation sized to the batch (one file
+    for a small batch) — per-batch cost O(touched buckets), the
     reference's per-shard fragment merge on import (batch/batch.go). The
     first batch materializes the current view into bucketed storage —
     UNLESS committed storage already exists at ``table_path``, in which
@@ -200,9 +201,10 @@ def partitioned_upsert_sink(
 ):
     """The SCALE form of :func:`upsert_sink`: each micro-batch upserts
     into a :class:`featurebase_spark.operators.writes.
-    PartitionedUpsertTable`, rewriting ONLY the hash-bucket partitions
-    the batch touches — per-batch cost O(touched buckets), matching the
-    reference's per-shard fragment merge on import (batch/batch.go).
+    PartitionedUpsertTable`, rewriting ONLY the hash buckets the batch
+    touches (into one new generation, as few files as the batch's size
+    needs) — per-batch cost O(touched buckets), matching the reference's
+    per-shard fragment merge on import (batch/batch.go).
     Optionally re-registers ``target_view`` over the table after each
     batch (bit-flip visibility)."""
 

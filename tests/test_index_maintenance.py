@@ -511,6 +511,51 @@ class TestLocalTier:
             assert rows
         cat.drop_table("loc_j")
 
+    def test_literal_write_collects_batch_once(self, spark, monkeypatch):
+        """A literal INSERT into a table with two driver-local indexed
+        fields collects the batch ONCE: the storage commit's bucket
+        routing and both fields' in-process merges share its rows. A
+        literal-key DELETE likewise. Routed answers still equal the
+        scan's."""
+        from featurebase_spark.operators.writes import literal_frame
+
+        cat = Catalog(spark)
+        fb_sql(spark, "create table loc_c (_id id, e string, "
+               "v int min 0 max 100)", catalog=cat)
+        fb_sql(spark, "insert into loc_c values " + ", ".join(
+            f"({i}, '{'ab'[i % 2]}', {i * 7 % 50})" for i in range(20)
+        ), catalog=cat)
+        fb_sql(spark, "create index on loc_c (e, v)", catalog=cat)
+        bm = cat.bitmap_catalog("loc_c")
+        assert bm.is_local("e") and bm.is_local("v")
+        schema = spark.table("loc_c").schema
+        frame_cls = type(spark.table("loc_c"))  # the session's concrete class
+        calls = []
+        real = frame_cls.collect
+
+        def counting(df):
+            calls.append(df)
+            return real(df)
+
+        monkeypatch.setattr(frame_cls, "collect", counting)
+        cat.insert("loc_c", literal_frame(
+            spark, [(2, "c", 11), (40, "a", 3), (41, "c", 50)], schema))
+        assert len(calls) == 1, calls
+        calls.clear()
+        cat.delete_ids("loc_c", literal_frame(spark, [(3,), (41,)], "_id bigint"))
+        assert len(calls) == 1, calls
+        monkeypatch.undo()
+        scan = spark.table("loc_c")
+        assert scan.count() == 20
+        for q, want in (
+            ("select count(*) from loc_c where e = 'c'",
+             scan.where("e = 'c'").count()),
+            ("select sum(v) from loc_c where e = 'a'",
+             scan.where("e = 'a'").agg(F.sum("v")).first()[0]),
+        ):
+            assert fb_sql(spark, q, catalog=cat).first()[0] == want, q
+        cat.drop_table("loc_c")
+
     def test_routed_scalar_answers_run_no_job(self, spark, jobs_run_by):
         """Routed scalar answers over driver-local fragments are VALUES
         LocalRelations: planning and collecting a routed SQL COUNT/SUM

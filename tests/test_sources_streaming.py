@@ -258,8 +258,6 @@ def test_partitioned_upsert_touches_only_batch_buckets(spark, tmpdir):
     """PartitionedUpsertTable: an upsert rewrites ONLY the hash-bucket
     partitions its keys land in — untouched partitions' files stay
     byte-for-byte in place (the per-shard fragment-merge cost shape)."""
-    import glob
-
     from featurebase_spark.operators.writes import PartitionedUpsertTable
 
     path = os.path.join(tmpdir, "pu_tbl")
@@ -271,15 +269,13 @@ def test_partitioned_upsert_touches_only_batch_buckets(spark, tmpdir):
     )
 
     def files():
-        # resolve each live bucket's dir through the manifest pointer
+        # resolve each live bucket's files through the manifest pointer;
+        # each must resolve to real files, or the comparison is vacuous
         out = {}
-        for b in range(t.buckets):
-            d = t.bucket_dir(b)
-            if d is not None:
-                out[b] = sorted(
-                    (os.path.basename(f), os.path.getmtime(f))
-                    for f in glob.glob(os.path.join(d, "*.parquet"))
-                )
+        for b in t._load_manifest()["buckets"]:
+            fs = t.bucket_files(int(b))
+            assert fs and all(os.path.isfile(f) for f in fs), (b, fs)
+            out[int(b)] = [(f, open(f, "rb").read()) for f in fs]
         return out
 
     before = files()
@@ -524,7 +520,6 @@ def test_streaming_end_to_end_decode_quantum_bucketed(spark, tmpdir):
     visibility, O(touched-buckets) commit counts, untouched-bucket
     byte-identity — and final-state equality against sequentially
     applied upserts."""
-    import glob
     import json as _json
 
     from pyspark.sql import functions as F
@@ -571,14 +566,13 @@ def test_streaming_end_to_end_decode_quantum_bucketed(spark, tmpdir):
     table.upsert = logging_upsert
 
     def bucket_files():
+        # every live bucket must resolve to real files, or the
+        # untouched-bucket comparison below would pass vacuously
         out = {}
-        for b in range(table.buckets):
-            d = table.bucket_dir(b)
-            if d is not None:
-                out[b] = sorted(
-                    (os.path.basename(f), os.path.getmtime(f))
-                    for f in glob.glob(os.path.join(d, "*.parquet"))
-                )
+        for b in table._load_manifest()["buckets"]:
+            fs = table.bucket_files(int(b))
+            assert fs and all(os.path.isfile(f) for f in fs), (b, fs)
+            out[int(b)] = [(f, open(f, "rb").read()) for f in fs]
         return out
 
     def run_stream():

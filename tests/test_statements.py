@@ -414,7 +414,6 @@ def test_statement_insert_touches_only_key_buckets(spark, cat, tmp_path):
     cost O(touched buckets), the per-shard fragment merge of
     batch/batch.go); DELETE WHERE likewise; TRUNCATE drops storage
     without rewriting anything."""
-    import glob
     import os
 
     fb_sql(spark, "create table bktins (_id id, a int, s string)", catalog=cat)
@@ -427,16 +426,14 @@ def test_statement_insert_touches_only_key_buckets(spark, cat, tmp_path):
     store = cat._storage["bktins"]
 
     def bucket_bytes():
-        # resolve each live bucket's dir through the manifest pointer
+        # resolve each live bucket's files through the manifest pointer;
+        # every live bucket must resolve to real files, or an empty
+        # before == after comparison would pass vacuously
         out = {}
-        for b in range(store.buckets):
-            d = store.bucket_dir(b)
-            if d is None:
-                continue
-            out[b] = {
-                os.path.basename(f): open(f, "rb").read()
-                for f in glob.glob(os.path.join(d, "*.parquet"))
-            }
+        for b in store._load_manifest()["buckets"]:
+            files = store.bucket_files(int(b))
+            assert files and all(os.path.isfile(f) for f in files), (b, files)
+            out[int(b)] = {f: open(f, "rb").read() for f in files}
         return out
 
     before = bucket_bytes()

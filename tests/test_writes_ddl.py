@@ -507,12 +507,14 @@ def test_literal_and_distributed_batches_leave_identical_tables(spark, tmp_path)
     assert out[0] == out[1]
 
 
-def test_literal_upsert_two_jobs_one_file_per_bucket(spark, tmp_path, jobs_run_by):
-    """A 200-row literal upsert into a 16-bucket table commits in at most
-    two Spark jobs (the staging shuffle's map stage and the write),
-    writes ONE file per touched bucket, and runs at most
-    ``defaultParallelism`` write tasks (part files are numbered by the
-    task that wrote them)."""
+def test_literal_upsert_small_table_two_jobs_one_data_file(
+    spark, tmp_path, jobs_run_by
+):
+    """A 200-row literal upsert into a small 16-bucket table commits in
+    at most two Spark jobs (the staging shuffle's map stage and the
+    write) and writes exactly ONE data file, which every bucket points
+    at: the commit writes its touched buckets into the fewest files
+    their size needs, not one file per bucket."""
     import glob
     import os
 
@@ -530,13 +532,151 @@ def test_literal_upsert_two_jobs_one_file_per_bucket(spark, tmp_path, jobs_run_b
     jobs = jobs_run_by(lambda: touched.extend(t.upsert(batch)))
     assert jobs <= 2, jobs
     assert len(touched) == 16
-    parts = []
-    for b in touched:
-        files = glob.glob(os.path.join(t.bucket_dir(b), "*.parquet"))
-        assert len(files) == 1, (b, files)
-        parts.append(os.path.basename(files[0]).split("-")[1])
-    assert len(set(parts)) <= spark.sparkContext.defaultParallelism, parts
+    gens = set(t._load_manifest()["buckets"].values())
+    assert len(gens) == 1, gens
+    written = glob.glob(os.path.join(t.path, gens.pop(), "*.parquet"))
+    assert len(written) == 1, written
+    assert all(t.bucket_files(b) == written for b in touched)
     assert t.read().count() == 1000 + sum(1 for i in range(200) if i * 7 >= 1000)
+
+
+def _parent_layout_table(spark, path: str, rows: list, schema: str, n: int):
+    """A table committed in the earlier layout: one ``__bucket=N``
+    directory per bucket under its generation, and a manifest without
+    written-bucket counts."""
+    import json
+    import os
+
+    df = spark.createDataFrame(rows, schema)
+    b = df.withColumn("__bucket", F.pmod(F.xxhash64(F.col("_id")), F.lit(n)))
+    gen = "g_0123456789ab"
+    b.repartition(n, "__bucket").write.partitionBy("__bucket").parquet(
+        os.path.join(path, gen)
+    )
+    staged = sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(os.path.join(path, gen))
+        if d.startswith("__bucket=")
+    )
+    man = {"version": 1, "key": "_id", "n_buckets": n,
+           "schema": b.schema.json(), "buckets": {str(x): gen for x in staged}}
+    with open(os.path.join(path, "MANIFEST.json"), "w") as f:
+        json.dump(man, f)
+
+
+def test_earlier_layout_table_reads_and_commits(spark, tmp_path):
+    """A table committed in the ``__bucket=N`` directory layout reads,
+    upserts (literal and distributed) and deletes through the one
+    reader and write path, and ends with the same rows and ``__bucket``
+    values as a table built fresh from the same operations."""
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        literal_frame,
+    )
+
+    schema = "_id bigint, v string"
+    base = [(i, f"v{i}") for i in range(60)]
+    _parent_layout_table(spark, str(tmp_path / "old"), base, schema, 16)
+    old = PartitionedUpsertTable(spark, str(tmp_path / "old")).load()
+    new = PartitionedUpsertTable(spark, str(tmp_path / "new"), "_id", 16)
+    new.init(spark.createDataFrame(base, schema))
+
+    def state(t):
+        return sorted((r["_id"], r["v"], r["__bucket"])
+                      for r in t._read_raw().collect())
+
+    assert state(old) == state(new)
+    for t in (old, new):
+        t.upsert(literal_frame(spark, [(3, "a"), (100, "b")], schema))
+        t.upsert(spark.createDataFrame([(5, "c"), (7, "d")], schema))
+        t.delete_keys(literal_frame(spark, [(11,), (12,)], "_id bigint"))
+    assert state(old) == state(new)
+    got = {r["_id"]: r["v"] for r in old.read().collect()}
+    assert got[3] == "a" and got[100] == "b" and got[5] == "c"
+    assert 11 not in got and 12 not in got and len(got) == 59
+
+
+def test_generations_keep_half_their_buckets(spark, tmp_path):
+    """Space bound: after every commit of a run of small upserts and
+    deletes, each live generation still has at least half the buckets
+    it was written with (a commit that would leave fewer folds the rest
+    in), only live generations remain on disk, and the rows equal a
+    last-write-wins model of the run. Over the run, buckets rewritten
+    stay within twice the buckets touched (a fold moves fewer buckets
+    than the commits that emptied its generation touched)."""
+    import os
+    import random
+
+    from featurebase_spark.operators.writes import (
+        PartitionedUpsertTable,
+        literal_frame,
+        spark_bucket,
+    )
+
+    n = 16
+    t = PartitionedUpsertTable(spark, str(tmp_path / "sb"), "_id", n)
+    model = {i: f"v{i}" for i in range(64)}
+    t.init(spark.createDataFrame(sorted(model.items()), "_id bigint, v string"))
+    rnd = random.Random(7)
+    folds = n_touched = n_rewritten = 0
+    for step in range(14):
+        keys = rnd.sample(range(96), rnd.randint(1, 3))
+        if step % 4 == 3:
+            rewritten = t.delete_keys(
+                literal_frame(spark, [(k,) for k in keys], "_id bigint"))
+            for k in keys:
+                model.pop(k, None)
+        else:
+            rewritten = t.upsert(literal_frame(
+                spark, [(k, f"s{step}") for k in keys], "_id bigint, v string"))
+            model.update({k: f"s{step}" for k in keys})
+        touched = {spark_bucket(k, n) for k in keys}
+        assert touched <= set(rewritten)
+        folds += len(rewritten) > len(touched)
+        n_touched += len(touched)
+        n_rewritten += len(rewritten)
+        man = t._load_manifest()
+        live = {}
+        for g in man["buckets"].values():
+            live[g] = live.get(g, 0) + 1
+        for g, k in live.items():
+            assert 2 * k >= man["gens"][g], (step, g, k, man["gens"][g])
+        on_disk = {d for d in os.listdir(t.path) if d.startswith("g_")}
+        assert on_disk == set(live), step
+        got = {r["_id"]: r["v"] for r in t.read().collect()}
+        assert got == model, step
+    assert folds > 0
+    assert n_rewritten <= 2 * n_touched, (n_rewritten, n_touched)
+
+
+def test_large_init_packs_each_bucket_into_one_file(spark, tmp_path):
+    """A distributed init of a frame large enough to span several
+    shuffle partitions writes at most min(buckets, shuffle partitions)
+    data files; each bucket's rows sit in exactly one of them, sorted
+    by ``__bucket`` within the file."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
+
+    from featurebase_spark.operators.writes import PartitionedUpsertTable
+
+    t = PartitionedUpsertTable(spark, str(tmp_path / "big"), "_id", 16)
+    t.init(spark.range(200_000).selectExpr(
+        "id AS _id", "sha2(CAST(id AS string), 256) AS v"))
+    gen = t._load_manifest()["buckets"]["0"]
+    files = glob.glob(os.path.join(t.path, gen, "*.parquet"))
+    cap = min(16, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert 1 <= len(files) <= cap, files
+    owner = {}
+    for f in files:
+        col = pq.read_table(f, columns=["__bucket"]).column(0).to_pylist()
+        assert col == sorted(col), f
+        for b in set(col):
+            assert b not in owner, (b, owner.get(b), f)
+            owner[b] = f
+    assert sorted(owner) == list(range(16))
+    assert t.read().count() == 200_000
 
 
 def test_literal_frame_roundtrips_hostile_payloads(spark):
